@@ -23,6 +23,8 @@ instead of a single connection.
 from __future__ import annotations
 
 import enum
+import os
+import uuid
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +50,19 @@ def _pg_jdbc_driver_available(spark: SparkSession) -> bool:
         return True
     except Exception:  # noqa: BLE001 — ClassNotFound arrives as Py4JError
         return False
+
+
+def _use_wire(uri: str, via: str, spark: SparkSession) -> bool:
+    """Whether ``via`` resolves to the pgwire transport for ``uri``."""
+    if via not in ("auto", "jdbc", "pgwire"):
+        raise EngineError(f"unknown transport {via!r} (auto|jdbc|pgwire)")
+    is_pg_uri = uri.startswith(("postgresql://", "postgres://"))
+    use_wire = via == "pgwire" or (
+        via == "auto" and is_pg_uri and not _pg_jdbc_driver_available(spark)
+    )
+    if use_wire and not is_pg_uri:
+        raise EngineError(f"pgwire transport needs a postgresql:// URI, got {uri!r}")
+    return use_wire
 
 
 def read_sql(
@@ -79,18 +94,9 @@ def read_sql(
     the JDBC transport only.
     """
     spark = spark or get_session()
-    if via not in ("auto", "jdbc", "pgwire"):
-        raise EngineError(f"unknown transport {via!r} (auto|jdbc|pgwire)")
-    is_pg_uri = uri.startswith(("postgresql://", "postgres://"))
-    use_wire = via == "pgwire" or (
-        via == "auto" and is_pg_uri and not _pg_jdbc_driver_available(spark)
-    )
+    use_wire = _use_wire(uri, via, spark)
     try:
         if use_wire:
-            if not is_pg_uri:
-                raise EngineError(
-                    f"pgwire transport needs a postgresql:// URI, got {uri!r}"
-                )
             from flaco_spark.sources.pgwire import read_sql_wire
 
             return read_sql_wire(
@@ -148,10 +154,27 @@ def sql(
 def read_sql_to_pyarrow(uri: str, stmt: str, spark: SparkSession | None = None) -> "pa.Table":
     """SQL → in-memory ``pyarrow.Table`` (ref src/lib.rs:42-72).
 
-    The reference hands columns over via the Arrow C Data Interface;
-    Spark's equivalent zero-copy-ish path is ``DataFrame.toArrow()``
-    (Arrow IPC batches executor→driver→Python, no pandas detour).
+    When the transport resolves to pgwire (a ``postgresql://`` URI and
+    no PostgreSQL JDBC jar), the driver reads the wire itself, as the
+    reference does: one connection, the schema from the statement's
+    Describe, and binary pages decoded straight into Arrow batches —
+    no Spark job, no schema probe.  Otherwise the JDBC read hands its
+    batches over with ``DataFrame.toArrow()``.  Both routes return the
+    same Arrow schema.
     """
+    import pyarrow as pa
+
+    spark = spark or get_session()
+    if _use_wire(uri, "auto", spark):
+        from flaco_spark.sources.pgwire import wire_batches
+
+        try:
+            with wire_batches(uri, stmt, ds_safe=True) as (schema, batches):
+                return pa.Table.from_batches(batches, schema=schema)
+        except EngineError:
+            raise
+        except Exception as exc:  # noqa: BLE001
+            raise EngineError.wrap(exc, f"read_sql_to_pyarrow({stmt!r})") from exc
     df = read_sql(uri, stmt, spark=spark)
     try:
         return df.toArrow()
@@ -170,11 +193,49 @@ def read_sql_to_file(
     """SQL → columnar file (ref src/lib.rs:77-85).
 
     ``single_file=True`` matches the reference's output shape (one
-    file); ``single_file=False`` writes a directory of per-partition
-    files — the shape that actually scales.
+    file).  Over pgwire it is written on the driver straight from the
+    wire, one page at a time (snappy Parquet, lz4 Feather), so the
+    driver holds one page rather than the whole result; the file
+    appears only once complete.  ``single_file=False`` writes a
+    directory of per-partition files through Spark — the shape that
+    actually scales.
     """
+    spark = spark or get_session()
+    if single_file and _use_wire(uri, "auto", spark):
+        try:
+            _wire_to_file(uri, stmt, path, format)
+        except EngineError:
+            raise
+        except Exception as exc:  # noqa: BLE001
+            raise EngineError.wrap(exc, f"read_sql_to_file({path!r})") from exc
+        return
     df = read_sql(uri, stmt, spark=spark)
     write_dataframe_to_file(df, path, format=format, single_file=single_file)
+
+
+def _wire_to_file(uri: str, stmt: str, path: str, format: FileFormat) -> None:
+    """Stream ``stmt``'s pages from the wire into one file, written
+    under a temporary name beside ``path`` and renamed when complete."""
+    import pyarrow.ipc as ipc
+    import pyarrow.parquet as pq
+
+    from flaco_spark.sources.pgwire import wire_batches
+
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    try:
+        with wire_batches(uri, stmt, ds_safe=True) as (schema, batches):
+            if format is FileFormat.Parquet:
+                writer = pq.ParquetWriter(tmp, schema, compression="snappy")
+            else:  # lz4, as pyarrow.feather.write_feather
+                options = ipc.IpcWriteOptions(compression="lz4")
+                writer = ipc.new_file(tmp, schema, options=options)
+            with writer:
+                for batch in batches:
+                    writer.write_batch(batch)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def write_dataframe_to_file(

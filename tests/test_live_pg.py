@@ -381,10 +381,10 @@ def test_wire_paging_midstream_error_surfaces_and_recovers(pg_local):
 
 def test_wire_binary_text_paths_agree(pg_local):
     """Differential: the binary extended path (wire_query_to_arrow →
-    query_paged) and the simple-query text path (_rows_to_arrow over
-    conn.query) must produce IDENTICAL Arrow tables over every OID arm
-    — including NaN floats, exact NUMERIC, tz normalization, intervals
-    and arrays."""
+    the columnar page decoder) and the simple-query text path
+    (_rows_to_arrow over conn.query) must produce IDENTICAL Arrow tables
+    over every OID arm — including NaN floats, exact NUMERIC, tz
+    normalization, intervals and arrays."""
     from flaco_spark.sources.pgwire import (
         PgWireConnection,
         _rows_to_arrow,
@@ -411,9 +411,8 @@ def test_wire_binary_text_paths_agree(pg_local):
 
 
 def test_wire_timetz_text_fallback(pg_local):
-    """timetz has no binary decoder: the Bind must request text format
-    for THAT column only (binary for the rest), and the decoded value
-    still normalizes to UTC."""
+    """timetz decodes beside other columns (binary, like every column)
+    and the value normalizes to UTC."""
     import datetime as dt
 
     from flaco_spark.sources.pgwire import wire_query_to_arrow
@@ -542,6 +541,97 @@ def test_read_sql_auto_falls_back_to_wire(spark, pg_local, tmp_path):
     assert str(rows[1]["num"]) == "1.500000000000000000"
     assert rows[1]["u"] == "a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a11"
     assert rows[2]["by"] == b"\xde\xad\xbe\xef"
+
+
+def test_wire_query_slower_than_connect_timeout(pg_local):
+    """connect_timeout bounds connection set-up only: a query that runs
+    longer than it returns its rows instead of a socket timeout."""
+    from flaco_spark.sources.pgwire import wire_query_to_arrow
+
+    t = wire_query_to_arrow(
+        _uri(pg_local, connect_timeout=1), "SELECT 7 AS k FROM pg_sleep(2)"
+    )
+    assert t.to_pylist() == [{"k": 7}]
+
+
+def _server_sessions(monitor) -> int:
+    """Sessions ever opened on the database, once every other client
+    backend has exited and flushed its statistics."""
+    import time
+
+    last = None
+    for _ in range(100):
+        others = monitor.query(
+            "SELECT count(*) FROM pg_stat_activity WHERE backend_type = "
+            "'client backend' AND pid <> pg_backend_pid()"
+        )[1][0][0]
+        monitor.query("SELECT pg_stat_force_next_flush()")
+        now = int(monitor.query(
+            "SELECT sessions FROM pg_stat_database "
+            "WHERE datname = current_database()"
+        )[1][0][0])
+        if others == "0" and now == last:
+            return now
+        last = now
+        time.sleep(0.05)
+    raise AssertionError("client sessions did not settle")
+
+
+def _same_table(got, want) -> None:
+    import math
+
+    assert got.schema == want.schema
+    assert got.num_rows == want.num_rows
+    for c in want.column_names:
+        for x, y in zip(got[c].to_pylist(), want[c].to_pylist()):
+            if isinstance(y, float) and math.isnan(y):
+                assert math.isnan(x), c
+            else:
+                assert x == y, (c, x, y)
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "SELECT * FROM typed ORDER BY id",
+        "SELECT * FROM typed WHERE false",
+        "SELECT grp, count(*) AS n, sum(id) AS s FROM series GROUP BY grp ORDER BY grp",
+    ],
+)
+def test_driver_route_matches_spark_route(spark, pg_local, tmp_path, stmt):
+    """read_sql_to_pyarrow and single-file read_sql_to_file read the wire
+    on the driver; their table and both files carry the same Arrow schema
+    (time as int64 µs) and values as read_sql(...).toArrow(), zero-row
+    files keep the schema, and each call opens exactly one server
+    session."""
+    import pyarrow as pa
+    import pyarrow.feather as feather
+    import pyarrow.parquet as pq
+
+    from flaco_spark.core import FileFormat, read_sql, read_sql_to_file, read_sql_to_pyarrow
+    from flaco_spark.sources.pgwire import PgWireConnection, parse_pg_uri
+
+    uri = _uri(pg_local)
+    want = read_sql(uri, stmt, spark=spark).toArrow()
+    if "typed" in stmt:
+        assert want.schema.field("tm").type == pa.int64()
+    calls = {
+        "pyarrow": lambda: read_sql_to_pyarrow(uri, stmt, spark=spark),
+        "parquet": lambda: (
+            read_sql_to_file(uri, stmt, str(tmp_path / "o.parquet"), FileFormat.Parquet, spark=spark),
+            pq.read_table(tmp_path / "o.parquet"),
+        )[1],
+        "feather": lambda: (
+            read_sql_to_file(uri, stmt, str(tmp_path / "o.feather"), FileFormat.Feather, spark=spark),
+            feather.read_table(str(tmp_path / "o.feather")),
+        )[1],
+    }
+    with PgWireConnection(parse_pg_uri(uri)) as monitor:
+        for kind, call in calls.items():
+            before = _server_sessions(monitor)
+            got = call()
+            assert _server_sessions(monitor) - before == 1, kind
+            _same_table(got, want)
 
 
 # ---------------------------------------------------------------------------

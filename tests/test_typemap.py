@@ -216,6 +216,26 @@ def test_pgwire_uri_parsing():
     )
 
 
+def test_pgwire_socket_failures_are_engine_errors():
+    """A server that accepts and never answers: the set-up read times
+    out after connect_timeout as an EngineError naming the server and
+    the cause, not a raw TimeoutError."""
+    import socket
+
+    import pytest
+
+    from flaco_spark.errors import EngineError
+    from flaco_spark.sources.pgwire import PgWireConnection, parse_pg_uri
+
+    with socket.socket() as listener:
+        listener.bind(("127.0.0.1", 0))
+        listener.listen(1)
+        port = listener.getsockname()[1]
+        uri = f"postgresql://u@127.0.0.1:{port}/db?connect_timeout=0.3"
+        with pytest.raises(EngineError, match=f"127.0.0.1:{port}.*TimeoutError"):
+            PgWireConnection(parse_pg_uri(uri))
+
+
 def test_pgwire_range_predicates_partition_not_filter():
     """The Spark-JDBC contract: disjoint, complete, NULL-absorbing."""
     from flaco_spark.sources.pgwire import range_predicates
@@ -236,47 +256,55 @@ def test_pgwire_binary_numeric_decode():
     """r8 ADVICE(medium): PG 14+ numeric +/-Infinity sign words
     (0xD000/0xF000, nd=0) must decode to None (matching the text path's
     'Infinity' -> None divergence), not fall through the positive branch
-    as Decimal 0; unknown sign words raise. Also: >28-digit numerics
-    decode exactly (context-free construction, not scaleb)."""
+    as Decimal 0; unknown sign words raise. Also: numerics wider than
+    18 digits (past int64, and past a 28-digit Decimal context) decode
+    exactly.  Checked on the columnar page decoder, one column of
+    synthetic DataRows, against the per-value oracle."""
     import struct
     from decimal import Decimal
 
+    import pytest
+
     from flaco_spark.errors import EngineError
-    from flaco_spark.sources.pgwire import _bdec_numeric
+    from flaco_spark.sources.pgwire import _decode_page, arrow_schema_for
+    from tests.pgwire_oracle import _bdec_numeric, page_of
 
     def payload(digits, weight, sign, dscale):
         return struct.pack("!hhHH", len(digits), weight, sign, dscale) + (
             struct.pack(f"!{len(digits)}h", *digits) if digits else b""
         )
 
-    # 12345.6789 = digits [1,2345,6789] base-10000, weight 1, dscale 4
-    assert _bdec_numeric(payload([1, 2345, 6789], 1, 0x0000, 4)) == Decimal(
-        "12345.6789"
-    )
-    assert _bdec_numeric(payload([42], 0, 0x4000, 0)) == Decimal("-42")
-    assert _bdec_numeric(payload([], 0, 0xC000, 0)) is None  # NaN
-    assert _bdec_numeric(payload([], 0, 0xD000, 0)) is None  # +Infinity
-    assert _bdec_numeric(payload([], 0, 0xF000, 0)) is None  # -Infinity
-    import pytest
-    with pytest.raises(EngineError, match="sign word"):
-        _bdec_numeric(payload([], 0, 0xA000, 0))
+    def decode(*payloads):
+        fields = [("n", 1700)]
+        page, starts = page_of([[p] for p in payloads])
+        batch = _decode_page(page, starts, fields, arrow_schema_for(fields))
+        return batch.column(0).to_pylist()
 
-    # 38 significant digits survive exactly (scaleb would round at 28).
-    # Build base-10000 groups on a 4-digit grid: scale the unscaled int
-    # to 12 fractional digits so the decimal point lands on a group
-    # boundary (PG itself pads the same way).
-    big = Decimal("12345678901234567890123456789.123456789")
-    unscaled12 = int(str(big).replace(".", "")) * 1000
+    # 12345.6789 = digits [1,2345,6789] base-10000, weight 1, dscale 4
+    fin = [payload([1, 2345, 6789], 1, 0x0000, 4), payload([42], 0, 0x4000, 0)]
+    special = [payload([], 0, s, 0) for s in (0xC000, 0xD000, 0xF000)]
+    got = decode(*fin, *special, None)
+    assert got == [Decimal("12345.6789"), Decimal("-42"), None, None, None, None]
+    assert got[:2] == [_bdec_numeric(p) for p in fin]  # NaN, ±Infinity → None
+    with pytest.raises(EngineError, match="sign word"):
+        decode(payload([], 0, 0xA000, 0))
+
+    # 38 significant digits (20 integer, 18 fractional) survive exactly:
+    # wider than int64, and a 28-digit Decimal context would round them.
+    # Base-10000 groups sit on a 4-digit grid, so the unscaled value is
+    # padded to 20 fractional digits (PG itself pads the same way).
+    big = Decimal("12345678901234567890.123456789012345678")
     groups = []
-    v = unscaled12
+    v = int(str(big).replace(".", "")) * 100
     while v:
         groups.append(v % 10000)
         v //= 10000
     groups.reverse()
-    weight = len(groups) - 3 - 1  # 3 fractional groups of 4 digits
-    got = _bdec_numeric(payload(groups, weight, 0x0000, 9))
-    assert got == big
-    assert str(got) == str(big)  # exact digits, no 28-digit rounding
+    wide = payload(groups, len(groups) - 5 - 1, 0x0000, 18)  # 5 fractional groups
+    assert _bdec_numeric(wide) == big
+    got = decode(wide, fin[0])
+    assert got == [big, Decimal("12345.6789")]
+    assert str(got[0]) == str(big)  # exact digits, no rounding
 
 
 def test_pgwire_datasource_rejects_single_bound():
