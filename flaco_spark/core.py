@@ -168,13 +168,8 @@ def read_sql_to_pyarrow(uri: str, stmt: str, spark: SparkSession | None = None) 
     if _use_wire(uri, "auto", spark):
         from flaco_spark.sources.pgwire import wire_batches
 
-        try:
-            with wire_batches(uri, stmt, ds_safe=True) as (schema, batches):
-                return pa.Table.from_batches(batches, schema=schema)
-        except EngineError:
-            raise
-        except Exception as exc:  # noqa: BLE001
-            raise EngineError.wrap(exc, f"read_sql_to_pyarrow({stmt!r})") from exc
+        with wire_batches(uri, stmt, ds_safe=True) as (schema, batches):
+            return pa.Table.from_batches(batches, schema=schema)
     df = read_sql(uri, stmt, spark=spark)
     try:
         return df.toArrow()
@@ -196,18 +191,18 @@ def read_sql_to_file(
     file).  Over pgwire it is written on the driver straight from the
     wire, one page at a time (snappy Parquet, lz4 Feather), so the
     driver holds one page rather than the whole result; the file
-    appears only once complete.  ``single_file=False`` writes a
+    appears only once complete.  Each 16,384-row page becomes one
+    Parquet row group (one IPC record batch), where the Spark route
+    writes a single row group: per-group dictionaries can make the
+    Parquet file larger when values repeat only across pages (+22% on
+    the benchmark's 200k-row table), while the groups read back
+    faster.  ``single_file=False`` writes a
     directory of per-partition files through Spark — the shape that
     actually scales.
     """
     spark = spark or get_session()
     if single_file and _use_wire(uri, "auto", spark):
-        try:
-            _wire_to_file(uri, stmt, path, format)
-        except EngineError:
-            raise
-        except Exception as exc:  # noqa: BLE001
-            raise EngineError.wrap(exc, f"read_sql_to_file({path!r})") from exc
+        _wire_to_file(uri, stmt, path, format)
         return
     df = read_sql(uri, stmt, spark=spark)
     write_dataframe_to_file(df, path, format=format, single_file=single_file)
@@ -232,7 +227,7 @@ def _wire_to_file(uri: str, stmt: str, path: str, format: FileFormat) -> None:
             with writer:
                 for batch in batches:
                     writer.write_batch(batch)
-        os.replace(tmp, path)
+            os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.remove(tmp)

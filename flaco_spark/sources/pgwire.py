@@ -42,8 +42,11 @@ buffer.  A reader holds one page and its Arrow batch at a time, so a
 billion-row extract stays flat in memory where the reference
 materializes the whole result (src/lib.rs:75,124).  The same batches
 feed the executor reader, the driver-side :func:`wire_query_to_arrow`
-and the driver-bound calls in :mod:`flaco_spark.core`.  The text
-decoders below serve the simple-query cycle
+and the driver-bound calls in :mod:`flaco_spark.core`; NUMERIC
+lands in decimal128(38,18) there, and a value it cannot hold raises.
+:meth:`PgWireConnection.query_paged` walks the same framing but
+returns Python rows, with NUMERIC as exact Decimals of any size.  The
+text decoders below serve the simple-query cycle
 (:meth:`PgWireConnection.query`).
 """
 
@@ -400,13 +403,12 @@ def _raise_if(bad: np.ndarray, message: str) -> None:
         raise EngineError(message)
 
 
-def _numeric_array(atype, page, u8, off, lens, valid) -> pa.Array:
-    """NUMERIC → ``atype`` (decimal128(38,18)).  NaN and ±Infinity have
-    no decimal analogue and become NULL (documented divergence).  When
-    every finite value fits 18 digits at the page's largest dscale, the
-    base-10000 digit groups sum into an int64 unscaled value, widened to
-    16 bytes and rescaled by Arrow's checked cast; otherwise the values
-    are built one by one."""
+def _numeric_unscaled(u8, off, lens, valid):
+    """A NUMERIC column as int64 unscaled values at the page's largest
+    dscale: ``(unscaled, scale, dscale, finite)``, or None when some
+    finite value needs more than 18 digits there.  NaN and ±Infinity
+    are not finite; they have no decimal analogue and become NULL
+    (documented divergence)."""
     at = np.where(valid, off, 0)
     nd, weight = _be(u8, at, ">i2").astype(np.int64), _be(u8, at, ">i2", 2).astype(np.int64)
     sign, dscale = _be(u8, at, ">u2", 4), _be(u8, at, ">u2", 6)
@@ -420,7 +422,7 @@ def _numeric_array(atype, page, u8, off, lens, valid) -> pa.Array:
     ndig = 1 + (lead >= 10) + (lead >= 100) + (lead >= 1000)
     digits = np.where(nd > 0, 4 * weight + ndig, 0) + scale
     if scale > 18 or (finite & (digits > 18)).any():
-        return _numeric_by_value(atype, page, off, lens, valid)
+        return None
     acc = np.zeros(len(at), np.int64)
     for j in range(int(nd[finite].max(initial=0))):
         has = finite & (nd > j)
@@ -432,16 +434,36 @@ def _numeric_array(atype, page, u8, off, lens, valid) -> pa.Array:
             "numeric binary payload inconsistent with dscale",
         )
         acc += np.where(e >= 0, d * up, d // down)
-    acc = np.where(sign == 0x4000, -acc, acc)
-    wide = np.empty((len(at), 2), np.int64)  # little-endian int128 words
-    wide[:, 0] = acc
-    wide[:, 1] = acc >> 63
-    return _fixed_array(pa.decimal128(38, scale), wide, finite).cast(atype)
+    return np.where(sign == 0x4000, -acc, acc), scale, dscale, finite
 
 
-def _numeric_value(page, o: int):
-    """One binary NUMERIC → Decimal (None for NaN/±Infinity)."""
+def _decimal_array(unscaled: np.ndarray, scale: int, valid: np.ndarray) -> pa.Array:
+    wide = np.empty((len(unscaled), 2), np.int64)  # little-endian int128 words
+    wide[:, 0] = unscaled
+    wide[:, 1] = unscaled >> 63
+    return _fixed_array(pa.decimal128(38, scale), wide, valid)
+
+
+def _numeric_array(atype, page, u8, off, lens, valid) -> pa.Array:
+    """NUMERIC → ``atype`` (decimal128(38,18)).  When every finite value
+    fits 18 digits at the page's largest dscale, the base-10000 digit
+    groups sum into an int64 unscaled value, widened to 16 bytes and
+    rescaled by Arrow's checked cast; otherwise the values are built
+    one by one, and a value that does not fit ``atype`` raises
+    (:func:`_numeric_values` keeps such values exact)."""
+    got = _numeric_unscaled(u8, off, lens, valid)
+    if got is None:
+        return _numeric_by_value(atype, page, off, lens)
+    unscaled, scale, _, finite = got
+    return _decimal_array(unscaled, scale, finite).cast(atype)
+
+
+def _numeric_value(page, o: int, ln: int):
+    """One binary NUMERIC of ``ln`` bytes → exact Decimal of any size
+    (None for NaN/±Infinity)."""
     nd, weight, sign, dscale = struct.unpack_from("!hhHH", page, o)
+    if ln != 8 + 2 * nd:
+        raise EngineError("numeric value of inconsistent binary length")
     if sign in (0xC000, 0xD000, 0xF000):
         return None
     if sign not in (0x0000, 0x4000):
@@ -461,17 +483,44 @@ def _numeric_value(page, o: int):
     return Decimal((dsign, digits, -dscale))
 
 
-def _numeric_by_value(atype, page, off, lens, valid) -> pa.Array:
-    vals = [
-        _numeric_value(page, o) if v else None
-        for o, v in zip(off.tolist(), valid.tolist())
+def _numeric_objects(page, off, lens) -> list:
+    return [
+        _numeric_value(page, o, ln) if ln >= 0 else None
+        for o, ln in zip(off.tolist(), lens.tolist())
     ]
-    return pa.array(vals, type=atype)
 
 
-def _list_array(tname, atype, page, u8, off, lens, valid) -> pa.Array:
-    """1-D arrays: their element framing is walked per value, then the
-    elements decode as one column."""
+def _numeric_by_value(atype, page, off, lens) -> pa.Array:
+    try:
+        return pa.array(_numeric_objects(page, off, lens), type=atype)
+    except pa.ArrowInvalid as exc:
+        raise EngineError(f"numeric value does not fit {atype}: {exc}") from exc
+
+
+def _numeric_values(page, u8, off, lens) -> list:
+    """A NUMERIC column as exact Decimals, each at its own dscale as
+    PostgreSQL sent it (None for NULL, NaN and ±Infinity).  Columns
+    that fit int64 convert through Arrow, one dscale at a time."""
+    got = _numeric_unscaled(u8, off, lens, lens >= 0)
+    if got is None:
+        return _numeric_objects(page, off, lens)
+    unscaled, scale, dscale, finite = got
+    out = [None] * len(lens)
+    for d in np.unique(dscale[finite]).tolist():
+        rows = np.flatnonzero(finite & (dscale == d))
+        u = unscaled[rows]
+        _raise_if(u % _POW10[scale - d] != 0, "numeric binary payload inconsistent with dscale")
+        vals = _decimal_array(u // _POW10[scale - d], d, np.ones(len(rows), bool))
+        if len(rows) == len(out):
+            return vals.to_pylist()
+        for i, v in zip(rows.tolist(), vals.to_pylist()):
+            out[i] = v
+    return out
+
+
+def _list_elements(page, off, lens, valid):
+    """Element framing of a column of 1-D arrays, walked per value:
+    ``(counts, element offsets, element lengths)``."""
     counts = np.zeros(len(off), np.int64)
     eoff: list[int] = []
     elen: list[int] = []
@@ -493,14 +542,13 @@ def _list_array(tname, atype, page, u8, off, lens, valid) -> pa.Array:
         if p > o + lens[i]:
             raise EngineError("array value overruns its length")
         counts[i] = count
-    child = _decode_column(
-        tname[:-2],
-        atype.value_type,
-        page,
-        u8,
-        np.array(eoff, np.int64),
-        np.array(elen, np.int64),
-    )
+    return counts, np.array(eoff, np.int64), np.array(elen, np.int64)
+
+
+def _list_array(tname, atype, page, u8, off, lens, valid) -> pa.Array:
+    """1-D arrays: the elements decode as one column."""
+    counts, eoff, elen = _list_elements(page, off, lens, valid)
+    child = _decode_column(tname[:-2], atype.value_type, page, u8, eoff, elen)
     offsets = np.zeros(len(off) + 1, np.int32)
     np.cumsum(counts, out=offsets[1:])
     mask = None if valid.all() else pa.array(~valid)
@@ -562,7 +610,19 @@ def _decode_column(tname: str, atype, page, u8, off, lens) -> pa.Array:
             "INTERVAL with year/month components has no exact "
             "DayTimeIntervalType mapping (binary months != 0)",
         )
-        v = v + _be(u8, at, ">i4", 8).astype(np.int64) * _DAY_US
+        days = _be(u8, at, ">i4", 8).astype(np.int64)
+        _raise_if(
+            valid & (np.abs(days) > _I64_MAX // _DAY_US),
+            "INTERVAL value out of range",
+        )
+        day_us = days * _DAY_US
+        total = v + day_us
+        # the sum wraps exactly when it differs in sign from both terms
+        _raise_if(
+            valid & (((v ^ total) & (day_us ^ total)) < 0),
+            "INTERVAL value out of range",
+        )
+        v = total
     else:  # time, timetz (zone: seconds west of UTC) → µs since midnight UTC
         if tname == "timetz":
             v = v + _be(u8, at, ">i4", 8).astype(np.int64) * 1_000_000
@@ -572,9 +632,41 @@ def _decode_column(tname: str, atype, page, u8, off, lens) -> pa.Array:
     return _fixed_array(atype, v, valid)
 
 
+def _column_values(tname: str, atype, page, u8, off, lens) -> list:
+    """One column of a page as Python values.  NUMERIC stays exact at
+    any size (one Decimal per value, as PostgreSQL sent it); every
+    other type goes through its Arrow column."""
+    if tname == "numeric":
+        return _numeric_values(page, u8, off, lens)
+    if tname == "numeric[]":
+        valid = lens >= 0
+        counts, eoff, elen = _list_elements(page, off, lens, valid)
+        flat = _numeric_values(page, u8, eoff, elen)
+        ends = np.cumsum(counts).tolist()
+        return [
+            flat[e - c : e] if v else None
+            for e, c, v in zip(ends, counts.tolist(), valid.tolist())
+        ]
+    return _decode_column(tname, atype, page, u8, off, lens).to_pylist()
+
+
 def _decode_page(page: bytearray, starts: list[int], fields, schema) -> pa.RecordBatch:
     """DataRow messages of one page → one Arrow batch of ``schema``.
     ``starts`` holds the offset of each DataRow body in ``page``."""
+    columns = _page_columns(page, starts, fields, schema, _decode_column)
+    return pa.RecordBatch.from_arrays(columns, schema=schema)
+
+
+def _page_rows(page: bytearray, starts: list[int], fields, schema) -> list[list]:
+    """DataRow messages of one page → rows of Python values."""
+    columns = _page_columns(page, starts, fields, schema, _column_values)
+    return [list(r) for r in zip(*columns)]
+
+
+def _page_columns(page, starts, fields, schema, decode) -> list:
+    """Walks the framing of one page's DataRows and hands each column's
+    value offsets and lengths (-1 = NULL) to
+    ``decode(type_name, arrow_type, page, u8, off, lens)``."""
     u8 = np.frombuffer(page, np.uint8)
     start = np.array(starts, np.int64)
     try:
@@ -592,11 +684,11 @@ def _decode_page(page: bytearray, starts: list[int], fields, schema) -> pa.Recor
             off = voff + np.maximum(lens, 0)
             _raise_if(off > end, "DataRow value overruns its message")
             tname = oid_type_name(oid)
-            columns.append(_decode_column(tname, f.type, page, u8, voff, lens))
+            columns.append(decode(tname, f.type, page, u8, voff, lens))
         _raise_if(off != end, "DataRow longer than its values")
     except (IndexError, struct.error) as exc:
         raise EngineError(f"malformed DataRow page: {exc}") from exc
-    return pa.RecordBatch.from_arrays(columns, schema=schema)
+    return columns
 
 
 # ---------------------------------------------------------------------------
@@ -1053,15 +1145,14 @@ class PgWireConnection:
     def query_paged(self, sql: str, fetch_rows: int = 10_000):
         """Yields ``(fields, rows)`` per page of at most ``fetch_rows``
         rows, with values as Python objects — the row view of
-        :meth:`query_batches`."""
+        :meth:`query_batches`, except that NUMERIC values are exact
+        Decimals of any size (the Arrow column holds decimal128(38,18))."""
         pages = self._pages(sql, fetch_rows)
         fields = next(pages)
         schema = arrow_schema_for(fields)
         try:
             for page, starts in pages:
-                batch = _decode_page(page, starts, fields, schema)
-                columns = [c.to_pylist() for c in batch.columns]
-                yield fields, [list(r) for r in zip(*columns)]
+                yield fields, _page_rows(page, starts, fields, schema)
         finally:
             pages.close()
 
@@ -1185,9 +1276,16 @@ def wire_query_to_arrow(uri: str, stmt: str):
 @contextlib.contextmanager
 def wire_batches(uri: str, stmt: str, ds_safe: bool = False):
     """``(schema, batches)`` of :meth:`PgWireConnection.query_batches`
-    over a connection of its own, closed on exit."""
-    with PgWireConnection(parse_pg_uri(uri)) as conn:
-        yield conn.query_batches(stmt, ds_safe=ds_safe)
+    over a connection of its own, closed on exit.  Any other failure,
+    in the read or in the caller's use of the batches, surfaces as an
+    :class:`EngineError`."""
+    try:
+        with PgWireConnection(parse_pg_uri(uri)) as conn:
+            yield conn.query_batches(stmt, ds_safe=ds_safe)
+    except EngineError:
+        raise
+    except Exception as exc:  # noqa: BLE001 — single public error type
+        raise EngineError.wrap(exc, f"wire query {stmt!r}") from exc
 
 
 # ---------------------------------------------------------------------------

@@ -221,14 +221,19 @@ def rows_to_arrow(fields, pyrows, ds_safe: bool = False) -> pa.Table:
     return pa.Table.from_arrays(columns, schema=schema)
 
 
-def decode_page(page, starts, fields, ds_safe: bool = False) -> pa.Table:
-    """The oracle's view of one page: every DataRow decoded per value."""
+def decode_rows(page, starts, fields) -> list[list]:
+    """Every DataRow of one page decoded per value into Python objects."""
     decoders = [binary_decoder(oid_type_name(oid)) for _, oid in fields]
     rows = []
     for s in starts:
         (length,) = _I32.unpack_from(page, s - 4)
         rows.append(decode_data_row(bytes(page[s : s - 4 + length]), decoders))
-    return rows_to_arrow(fields, rows, ds_safe=ds_safe)
+    return rows
+
+
+def decode_page(page, starts, fields, ds_safe: bool = False) -> pa.Table:
+    """The oracle's view of one page: every DataRow decoded per value."""
+    return rows_to_arrow(fields, decode_rows(page, starts, fields), ds_safe=ds_safe)
 
 
 def page_of(rows: list[list[bytes | None]]) -> tuple[bytearray, list[int]]:

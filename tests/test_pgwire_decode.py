@@ -14,6 +14,7 @@ from __future__ import annotations
 import math
 import struct
 import sys
+from decimal import Decimal
 from pathlib import Path
 
 import pyarrow as pa
@@ -29,7 +30,9 @@ from flaco_spark.sources.pgwire import (  # noqa: E402
     OID_TO_NAME,
     PgWireConnection,
     _decode_page,
+    _page_rows,
     arrow_schema_for,
+    oid_type_name,
     parse_pg_uri,
 )
 from tests import pgwire_oracle as oracle  # noqa: E402
@@ -202,6 +205,56 @@ def test_wide_numeric_takes_the_exact_path(conn):
     assert got.column(1)[5].as_py() == Decimal(6 * 12345678901234567)
 
 
+def test_page_rows_match_oracle(conn):
+    """``query_paged``'s row view of every page agrees with the oracle,
+    and its NUMERIC values are the oracle's Decimals digit for digit
+    (same scale, not widened to the Arrow column's 18)."""
+    pages = conn._pages(STMT, 999)
+    fields = next(pages)
+    schema = arrow_schema_for(fields)
+    numeric = [i for i, (_, oid) in enumerate(fields) if oid_type_name(oid) == "numeric"]
+    for page, starts in pages:
+        got = _page_rows(page, starts, fields, schema)
+        want = oracle.decode_rows(page, starts, fields)
+        as_arrow = oracle.rows_to_arrow(fields, want).to_pylist()
+        assert len(got) == len(want) == len(starts)
+        for g, w, a in zip(got, want, as_arrow):
+            assert [_canon(v) for v in g] == [_canon(v) for v in a.values()]
+            assert [str(g[i]) for i in numeric] == [str(w[i]) for i in numeric]
+
+
+def test_query_paged_numerics_exact_at_any_size(conn):
+    """NUMERIC values too wide for decimal128(38,18) — 29 integer
+    digits, dscale 20, wide array elements — come back from
+    ``query_paged`` exactly as the oracle decodes them, while the Arrow
+    routes refuse them with an EngineError."""
+    stmt = (
+        "SELECT '12345678901234567890123456789.123456789'::numeric AS a,"
+        " 1::numeric / 3 AS b, ARRAY['1e30'::numeric, NULL, 'NaN'] AS c,"
+        " 1.50::numeric AS d"
+    )
+    ((fields, rows),) = list(conn.query_paged(stmt))
+    assert rows == [[
+        Decimal("12345678901234567890123456789.123456789"),
+        Decimal("0.33333333333333333333"),
+        [Decimal(10**30), None, None],
+        Decimal("1.50"),
+    ]]
+    assert [str(v) for v in rows[0][:2]] == [
+        "12345678901234567890123456789.123456789",
+        "0.33333333333333333333",
+    ]
+    pages = conn._pages(stmt, 10)
+    next(pages)
+    page, starts = next(pages)
+    pages.close()
+    assert oracle.decode_rows(page, starts, fields) == rows
+    for col in ("a", "b", "c"):
+        with pytest.raises(EngineError, match="does not fit"):
+            list(conn.query_batches(f"SELECT {col} FROM ({stmt}) s")[1])
+    assert conn.query("SELECT 1")[1] == [["1"]]
+
+
 @pytest.mark.parametrize(
     "expr",
     [
@@ -263,3 +316,26 @@ def test_malformed_pages_raise_engine_error():
 def test_invalid_utf8_raises_engine_error():
     with pytest.raises(EngineError, match="UTF-8"):
         _decode([("t", 25)], [[b"ok"], [b"\xff\xfe"]])
+
+
+def test_interval_out_of_int64_range_raises():
+    """An interval holds int32 days and int64 µs; their sum past int64
+    µs raises instead of wrapping.  The extremes just inside the range
+    agree with the oracle."""
+    day_us = 86_400_000_000
+    top = (2**63 - 1) // day_us
+
+    def iv(us: int, days: int) -> list[bytes]:
+        return [struct.pack("!qii", us, days, 0)]
+
+    fields = [("iv", 1186)]
+    # the oracle's timedelta normalises to whole negative days first, so
+    # its most negative representable value sits a day above int64's
+    inside = [iv(2**63 - 1 - top * day_us, top), iv(-(2**63) + (top + 1) * day_us, -top)]
+    page, starts = oracle.page_of(inside + [[None]])
+    got = pa.Table.from_batches([_decode_page(page, starts, fields, arrow_schema_for(fields))])
+    _assert_same(got, oracle.decode_page(page, starts, fields))
+    assert got.column(0).to_pylist()[2] is None
+    for row in (iv(0, 200_000_000), iv(0, -(2**31)), iv(2**63 - 1, 1), iv(-(2**63), -1)):
+        with pytest.raises(EngineError, match="INTERVAL value out of range"):
+            _decode(fields, [row])

@@ -256,9 +256,9 @@ def test_pgwire_binary_numeric_decode():
     """r8 ADVICE(medium): PG 14+ numeric +/-Infinity sign words
     (0xD000/0xF000, nd=0) must decode to None (matching the text path's
     'Infinity' -> None divergence), not fall through the positive branch
-    as Decimal 0; unknown sign words raise. Also: numerics wider than
-    18 digits (past int64, and past a 28-digit Decimal context) decode
-    exactly.  Checked on the columnar page decoder, one column of
+    as Decimal 0; unknown sign words raise. Also: >28-digit numerics
+    decode exactly (context-free construction, not scaleb).  Checked on
+    the columnar page decoder and on query_paged's row view of the same
     synthetic DataRows, against the per-value oracle."""
     import struct
     from decimal import Decimal
@@ -266,7 +266,7 @@ def test_pgwire_binary_numeric_decode():
     import pytest
 
     from flaco_spark.errors import EngineError
-    from flaco_spark.sources.pgwire import _decode_page, arrow_schema_for
+    from flaco_spark.sources.pgwire import _decode_page, _page_rows, arrow_schema_for
     from tests.pgwire_oracle import _bdec_numeric, page_of
 
     def payload(digits, weight, sign, dscale):
@@ -289,22 +289,37 @@ def test_pgwire_binary_numeric_decode():
     with pytest.raises(EngineError, match="sign word"):
         decode(payload([], 0, 0xA000, 0))
 
-    # 38 significant digits (20 integer, 18 fractional) survive exactly:
-    # wider than int64, and a 28-digit Decimal context would round them.
-    # Base-10000 groups sit on a 4-digit grid, so the unscaled value is
-    # padded to 20 fractional digits (PG itself pads the same way).
-    big = Decimal("12345678901234567890.123456789012345678")
-    groups = []
-    v = int(str(big).replace(".", "")) * 100
-    while v:
-        groups.append(v % 10000)
-        v //= 10000
-    groups.reverse()
-    wide = payload(groups, len(groups) - 5 - 1, 0x0000, 18)  # 5 fractional groups
+    def grouped(unscaled, frac_groups, dscale):
+        # base-10000 groups sit on a 4-digit grid: the unscaled value is
+        # padded to whole fractional groups (PG itself pads the same way)
+        groups = []
+        while unscaled:
+            groups.append(unscaled % 10000)
+            unscaled //= 10000
+        groups.reverse()
+        return payload(groups, len(groups) - frac_groups - 1, 0x0000, dscale)
+
+    # 38 significant digits survive exactly (scaleb would round at 28).
+    # 29 integer digits: the oracle and query_paged's rows keep them;
+    # decimal128(38,18) has room for 20, so the Arrow column refuses.
+    big = Decimal("12345678901234567890123456789.123456789")
+    wide = grouped(int(str(big).replace(".", "")) * 1000, 3, 9)
     assert _bdec_numeric(wide) == big
-    got = decode(wide, fin[0])
-    assert got == [big, Decimal("12345.6789")]
-    assert str(got[0]) == str(big)  # exact digits, no rounding
+    fields = [("n", 1700)]
+    page, starts = page_of([[wide], [fin[0]]])
+    rows = _page_rows(page, starts, fields, arrow_schema_for(fields))
+    assert rows == [[big], [Decimal("12345.6789")]]
+    assert str(rows[0][0]) == str(big)  # exact digits, no 28-digit rounding
+    with pytest.raises(EngineError, match="does not fit"):
+        decode(wide, fin[0])
+
+    # 20 integer + 18 fractional digits fill decimal128(38,18) exactly
+    fits = Decimal("12345678901234567890.123456789012345678")
+    fits_payload = grouped(int(str(fits).replace(".", "")) * 100, 5, 18)
+    assert _bdec_numeric(fits_payload) == fits
+    got = decode(fits_payload, fin[0])
+    assert got == [fits, Decimal("12345.6789")]
+    assert str(got[0]) == str(fits)
 
 
 def test_pgwire_datasource_rejects_single_bound():
