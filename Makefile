@@ -1,7 +1,7 @@
 # Dev workflow, mirroring the reference's Makefile targets
 # (/root/reference/Makefile: test / bench / memory profiling).
 
-.PHONY: test test-fast bench bench-small smoke gate gate10x probe staleness
+.PHONY: test test-fast perf bench bench-small smoke gate gate10x probe staleness
 
 test:            ## full suite (oracle parity + API + plans + streaming)
 	python -m pytest tests/ -q
@@ -9,6 +9,10 @@ test:            ## full suite (oracle parity + API + plans + streaming)
 test-fast:       ## everything except the slow differential suites
 	python -m pytest tests/ -q --ignore=tests/test_oracle_parity.py \
 	    --ignore=tests/test_property_differential.py
+
+perf:            ## the repo benchmark (BENCHMARK.json): both listed workloads once, seed 1, 30 s
+	python3 perfbench/run.py --workload wide_extract --seed 1 --seconds 30 --trace 0
+	python3 perfbench/run.py --workload point_queries --seed 1 --seconds 30 --trace 0
 
 bench:           ## headline queries + extraction legs at sf0.1 (one JSON line)
 	python bench.py

@@ -25,6 +25,7 @@ from __future__ import annotations
 import enum
 import os
 import uuid
+import weakref
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,13 +53,26 @@ def _pg_jdbc_driver_available(spark: SparkSession) -> bool:
         return False
 
 
+# SparkContext → whether its driver JVM has the PostgreSQL JDBC driver.
+# The JVM's classpath is fixed at launch, so one Py4J probe per context
+# answers every later call; a new context probes again.
+_PG_DRIVER_ON_CLASSPATH = weakref.WeakKeyDictionary()
+
+
+def _pg_driver_on_classpath(spark: SparkSession) -> bool:
+    sc = spark.sparkContext
+    if sc not in _PG_DRIVER_ON_CLASSPATH:
+        _PG_DRIVER_ON_CLASSPATH[sc] = _pg_jdbc_driver_available(spark)
+    return _PG_DRIVER_ON_CLASSPATH[sc]
+
+
 def _use_wire(uri: str, via: str, spark: SparkSession) -> bool:
     """Whether ``via`` resolves to the pgwire transport for ``uri``."""
     if via not in ("auto", "jdbc", "pgwire"):
         raise EngineError(f"unknown transport {via!r} (auto|jdbc|pgwire)")
     is_pg_uri = uri.startswith(("postgresql://", "postgres://"))
     use_wire = via == "pgwire" or (
-        via == "auto" and is_pg_uri and not _pg_jdbc_driver_available(spark)
+        via == "auto" and is_pg_uri and not _pg_driver_on_classpath(spark)
     )
     if use_wire and not is_pg_uri:
         raise EngineError(f"pgwire transport needs a postgresql:// URI, got {uri!r}")
@@ -85,13 +99,13 @@ def read_sql(
     the reference's single connection.
 
     ``via`` picks the transport: ``"jdbc"`` (Spark's JDBC source),
-    ``"pgwire"`` (the pure-stdlib wire-protocol DataSource,
+    ``"pgwire"`` (the pure-stdlib wire-protocol client,
     :mod:`flaco_spark.sources.pgwire` — no driver jar needed), or
     ``"auto"`` (default): JDBC when the URI is a raw ``jdbc:`` URL or
     the PostgreSQL driver jar is on the classpath, else pgwire for
     ``postgresql://`` URIs — so a flaco user's script runs verbatim
-    on a cluster with no PG jar installed.  ``fetchsize`` applies to
-    the JDBC transport only.
+    on a cluster with no PG jar installed.  ``fetchsize`` is the rows
+    per fetch (JDBC) or per Execute page (pgwire) of each partition.
     """
     spark = spark or get_session()
     use_wire = _use_wire(uri, via, spark)
@@ -107,6 +121,7 @@ def read_sql(
                 num_partitions=num_partitions,
                 lower_bound=lower_bound,
                 upper_bound=upper_bound,
+                fetchsize=fetchsize,
             )
         reader = jdbc_reader(
             spark,

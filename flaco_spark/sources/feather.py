@@ -37,8 +37,10 @@ def write_feather(df: DataFrame, path: str, single_file: bool = True) -> None:
         return
 
     # Distributed: one IPC file per partition, written executor-side.
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     os.makedirs(path, exist_ok=True)
-    schema = to_arrow_schema(df)
+    schema = to_arrow_schema(df.schema)
 
     def _write_partition(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import uuid
@@ -67,25 +69,16 @@ def write_feather(df: DataFrame, path: str, single_file: bool = True) -> None:
         counts = pa.record_batch([pa.array([n], type=pa.int64())], names=["rows_written"])
         yield counts
 
-    import pyarrow as pa
-
-    count_schema = "rows_written bigint"
-    counts = df.mapInArrow(_write_partition, schema=count_schema)
-    total = counts.groupBy().sum("rows_written").collect()[0][0]
-    if total is None:
-        # Zero-partition result: still leave a valid empty IPC file so the
-        # schema survives (the reference loses schemas on empty results,
-        # src/lib.rs:203-206 — we deliberately do not).
+    counts = df.mapInArrow(_write_partition, schema="rows_written bigint").collect()
+    if sum(r[0] for r in counts) == 0:
+        # No row written, so no partition file: still leave a valid empty
+        # IPC file so the schema survives (the reference loses schemas on
+        # empty results, src/lib.rs:203-206 — we deliberately do not).
         import pyarrow.ipc as ipc
 
         out = os.path.join(path, "part-empty.arrow")
-        with ipc.new_file(out, schema) as writer:  # noqa: F841
+        with ipc.new_file(out, schema):
             pass
-
-
-def to_arrow_schema(df: DataFrame) -> "pa.Schema":  # noqa: F821
-    """Arrow schema for a DataFrame without collecting rows."""
-    return df.limit(0).toArrow().schema
 
 
 def read_feather(spark: SparkSession, path: str) -> DataFrame:

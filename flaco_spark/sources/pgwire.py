@@ -21,11 +21,11 @@ decode — and upgrades the reference on every §7.5 axis:
   including the §7.5 defect fixes: NULL floats stay NULL, NUMERIC is
   exact decimal, UUID is a canonical string, TIMESTAMPTZ survives a
   leading NULL (no first-value sniffing — the OID alone decides).
-- **Distribution**: :class:`PgWireDataSource` plugs the wire into the
-  Spark-4 Python DataSource API — ``partitions()`` plans N disjoint
-  range predicates (the jdbc.py contract) and every executor task
-  opens its OWN server cursor, where the reference is one connection
-  on one thread.
+- **Distribution**: :func:`read_sql_wire` plans N disjoint range
+  predicates on the driver (the jdbc.py contract) and runs one
+  ``mapInArrow`` task per predicate in Spark's reused Python workers;
+  every task opens its OWN server cursor, where the reference is one
+  connection on one thread.
 
 Decode: Arrow results are read through a server-side PORTAL
 (extended protocol, ``Execute(max_rows=fetch_rows)``) with every
@@ -1228,8 +1228,8 @@ def _spark_schema_for(fields: list[tuple[str, int]], ds_safe: bool = False):
 
     def resolve(oid: int):
         dt = spark_type_for(oid_type_name(oid))
-        # The Python DataSource path rejects Spark 4.1's TimeType
-        # ([UNSUPPORTED_TIME_TYPE]); fall back to the typemap's own
+        # Spark 4.1's Arrow exchange with Python rejects TimeType
+        # ([UNSUPPORTED_ARROWTYPE]); fall back to the typemap's own
         # documented older-runtime mapping: µs since midnight as LONG.
         if ds_safe and hasattr(T, "TimeType") and isinstance(dt, T.TimeType):
             return T.LongType()
@@ -1289,7 +1289,7 @@ def wire_batches(uri: str, stmt: str, ds_safe: bool = False):
 
 
 # ---------------------------------------------------------------------------
-# Spark-4 Python DataSource: distributed wire reads
+# Distributed wire reads: one mapInArrow task per range predicate
 # ---------------------------------------------------------------------------
 
 
@@ -1325,19 +1325,14 @@ def check_partition_options(
     num_partitions: int | None,
     lower_bound,
     upper_bound,
-    bounds_ok_with_one_partition: bool = False,
 ) -> bool:
-    """The one check of the partitioned-read options, for
-    :func:`read_sql_wire` and the ``pgwire`` DataSource alike.  Options
-    that would be silently ignored, or a single bound, raise; returns
-    whether the read is range-partitioned (its bounds may still need
-    :func:`probe_bounds`).
+    """The one check of :func:`read_sql_wire`'s partitioned-read
+    options.  Options that would be silently ignored, or a single
+    bound, raise; returns whether the read is range-partitioned (its
+    bounds may still need :func:`probe_bounds`).
 
     A partition column with ``num_partitions=1`` reads the whole result
-    as one partition.  Bounds given with it are ignored, so
-    :func:`read_sql_wire` refuses them; the DataSource, whose option
-    set mirrors Spark's JDBC source, accepts them
-    (``bounds_ok_with_one_partition``)."""
+    as one partition, so bounds given with it are refused."""
     has_bounds = lower_bound is not None or upper_bound is not None
     if partition_column is None:
         if has_bounds or (num_partitions or 1) > 1:
@@ -1353,7 +1348,7 @@ def check_partition_options(
             "partitioned extract needs num_partitions with partition_column"
         )
     if num_partitions == 1:
-        if has_bounds and not bounds_ok_with_one_partition:
+        if has_bounds:
             raise EngineError(
                 "lower_bound/upper_bound supplied with num_partitions=1 — "
                 "a single partition reads the whole result and the bounds "
@@ -1368,111 +1363,6 @@ def check_partition_options(
     return True
 
 
-def _wire_datasource_classes():
-    """Defined lazily: pyspark.sql.datasource imports only when the
-    source is registered (keeps pgwire importable in slim contexts)."""
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _PgPartition(InputPartition):
-        def __init__(
-            self, uri: str, stmt: str, predicate: str, fetch_rows: int
-        ) -> None:
-            self.uri = uri
-            self.stmt = stmt
-            self.predicate = predicate
-            self.fetch_rows = fetch_rows
-
-    class PgWireReader(DataSourceReader):
-        def __init__(self, options: dict) -> None:
-            self.uri = options["uri"]
-            self.stmt = options.get("query") or f"SELECT * FROM {options['dbtable']}"
-            self.partition_column = options.get("partitioncolumn")
-            self.num_partitions = int(options.get("numpartitions", "1"))
-            self.lower = options.get("lowerbound")
-            self.upper = options.get("upperbound")
-            self.fetch_rows = int(options.get("fetchsize", "10000"))
-
-        def partitions(self):
-            partitioned = check_partition_options(
-                self.partition_column,
-                self.num_partitions,
-                self.lower,
-                self.upper,
-                bounds_ok_with_one_partition=True,
-            )
-            if not partitioned:
-                return [_PgPartition(self.uri, self.stmt, "TRUE", self.fetch_rows)]
-            if self.lower is None:
-                # plan-time MIN/MAX probe instead of an opaque
-                # executor-side TypeError on int(None)
-                self.lower, self.upper = probe_bounds(
-                    self.uri, self.stmt, self.partition_column
-                )
-            preds = range_predicates(
-                self.partition_column,
-                self.num_partitions,
-                int(self.lower),
-                int(self.upper),
-            )
-            return [
-                _PgPartition(self.uri, self.stmt, p, self.fetch_rows)
-                for p in preds
-            ]
-
-        def read(self, partition: "_PgPartition"):
-            # Executor-side: this task's OWN server portal, paged with
-            # Execute(max_rows=fetchSize), one Arrow batch per page, so
-            # task memory is O(fetchSize) — the distribution +
-            # boundedness upgrade over the reference's single
-            # connection materializing everything (src/lib.rs:46,75,124).
-            stmt = (
-                f"SELECT * FROM ({partition.stmt}) flaco_subq "
-                f"WHERE {partition.predicate}"
-            )
-            with PgWireConnection(parse_pg_uri(partition.uri)) as conn:
-                _, batches = conn.query_batches(
-                    stmt, partition.fetch_rows, ds_safe=True
-                )
-                yield from batches
-
-    class PgWireDataSource(DataSource):
-        """``spark.read.format("pgwire").option("uri", ...).option("query", ...)``
-
-        Options mirror :func:`flaco_spark.sources.jdbc.jdbc_options`:
-        ``uri``, ``query`` (or ``dbtable``), and the partitioned-read
-        quartet ``partitionColumn``/``numPartitions``/``lowerBound``/
-        ``upperBound`` (DataSource options arrive lower-cased)."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "pgwire"
-
-        def schema(self):
-            # Planning-time Describe: the statement's fields with no
-            # row read and nothing executed — and the schema survives
-            # zero-row results (§7.5(1) fix; the reference loses
-            # schemas there, src/lib.rs:203-206).
-            stmt = self.options.get("query") or (
-                f"SELECT * FROM {self.options['dbtable']}"
-            )
-            with PgWireConnection(parse_pg_uri(self.options["uri"])) as conn:
-                fields = conn.describe(stmt)
-            return _spark_schema_for(fields, ds_safe=True)
-
-        def reader(self, schema) -> DataSourceReader:
-            return PgWireReader(self.options)
-
-    return PgWireDataSource
-
-
-def register_pgwire_source(spark) -> None:
-    """Idempotently register the ``pgwire`` source on a session."""
-    try:
-        spark.dataSource.register(_wire_datasource_classes())
-    except Exception:
-        pass  # already registered on this session
-
-
 def probe_bounds(uri: str, stmt: str, partition_column: str) -> tuple[int, int]:
     """Planning-time MIN/MAX probe for the partition column — one
     driver-side aggregate the server answers from an index when one
@@ -1482,17 +1372,21 @@ def probe_bounds(uri: str, stmt: str, partition_column: str) -> tuple[int, int]:
     ``\\d``.  Returns a half-open-compatible pair (max+1 upper) so the
     probed bounds partition the column's full range."""
     with PgWireConnection(parse_pg_uri(uri)) as conn:
-        fields, rows = conn.query(
-            f"SELECT MIN({partition_column}), MAX({partition_column}) "
-            f"FROM ({stmt}) flaco_bounds_probe"
+        return _probe_bounds(conn, stmt, partition_column)
+
+
+def _probe_bounds(conn: PgWireConnection, stmt: str, partition_column: str):
+    _, rows = conn.query(
+        f"SELECT MIN({partition_column}), MAX({partition_column}) "
+        f"FROM ({stmt}) flaco_bounds_probe"
+    )
+    lo, hi = rows[0]
+    if lo is None or hi is None:
+        raise EngineError(
+            f"cannot auto-probe bounds: {partition_column!r} is all-NULL "
+            "or the query returns no rows — pass bounds explicitly"
         )
-        lo, hi = rows[0]
-        if lo is None or hi is None:
-            raise EngineError(
-                f"cannot auto-probe bounds: {partition_column!r} is all-NULL "
-                "or the query returns no rows — pass bounds explicitly"
-            )
-        return int(lo), int(hi) + 1
+    return int(lo), int(hi) + 1
 
 
 def read_sql_wire(
@@ -1503,24 +1397,44 @@ def read_sql_wire(
     num_partitions: int | None = None,
     lower_bound: int | None = None,
     upper_bound: int | None = None,
+    fetchsize: int = 10_000,
 ):
     """Distributed wire-protocol scan as a DataFrame — the jdbc-free
     twin of :func:`flaco_spark.core.read_sql` (same signature shape).
 
-    With ``partition_column`` set and bounds omitted, the bounds are
-    auto-probed at plan time (:func:`probe_bounds`)."""
+    Planning happens on the driver over one connection: the bounds
+    probe when ``partition_column`` is set and bounds are omitted
+    (:func:`probe_bounds`), then Describe for the schema, which
+    survives zero-row results.  Each range predicate then becomes one
+    task of ``spark.range(n).mapInArrow``, which opens its own server
+    portal and yields one Arrow batch per Execute page of at most
+    ``fetchsize`` rows, so task memory stays bounded by the page."""
     partitioned = check_partition_options(
         partition_column, num_partitions, lower_bound, upper_bound
     )
-    register_pgwire_source(spark)
-    reader = spark.read.format("pgwire").option("uri", uri).option("query", stmt)
-    if partitioned:
-        if lower_bound is None:
-            lower_bound, upper_bound = probe_bounds(uri, stmt, partition_column)
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    return reader.load()
+    info = parse_pg_uri(uri)
+    with PgWireConnection(info) as conn:
+        if partitioned and lower_bound is None:
+            lower_bound, upper_bound = _probe_bounds(conn, stmt, partition_column)
+        schema = _spark_schema_for(conn.describe(stmt), ds_safe=True)
+    preds = (
+        range_predicates(partition_column, num_partitions, int(lower_bound), int(upper_bound))
+        if partitioned
+        else ["TRUE"]
+    )
+
+    def read(ids):
+        # Each range value names one predicate; Spark's reused Python
+        # workers run this, so no process is spawned per call.
+        for chunk in ids:
+            for i in chunk.column(0).to_pylist():
+                with PgWireConnection(info) as conn:
+                    _, batches = conn.query_batches(
+                        f"SELECT * FROM ({stmt}) flaco_subq WHERE {preds[i]}",
+                        fetchsize,
+                        ds_safe=True,
+                    )
+                    yield from batches
+
+    n = len(preds)
+    return spark.range(0, n, 1, n).mapInArrow(read, schema)

@@ -138,7 +138,7 @@ def main() -> int:
                         lower_bound=1,
                         upper_bound=rows + 1,
                     )
-                    df.count()  # warm (DataSource registration, schema probe)
+                    df.count()  # warm (Python workers, first connections)
                     best = float("inf")
                     for _ in range(3):
                         t0 = time.perf_counter()

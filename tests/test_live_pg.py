@@ -11,7 +11,7 @@ postgres:12).  This module replays that shape against a REAL server:
   (self-signed cert) and per-user auth methods (trust / md5 /
   scram-sha-256) wired into ``pg_hba.conf``.
 - The engine side is :mod:`flaco_spark.sources.pgwire` — the
-  pure-stdlib wire-protocol client + Spark Python DataSource — because
+  pure-stdlib wire-protocol client + its ``mapInArrow`` read — because
   this runtime has no PostgreSQL JDBC jar.  The JDBC variant of the
   same e2e (`test_live_pg_jdbc_extract`) still auto-skips on the
   missing jar and turns real the day one appears, unchanged.
@@ -277,12 +277,12 @@ def test_plain_connection_is_not_tls(pg_local):
 
 
 # ---------------------------------------------------------------------------
-# Distributed wire reads (Spark DataSource) + flaco-parity API e2e
+# Distributed wire reads (mapInArrow) + flaco-parity API e2e
 # ---------------------------------------------------------------------------
 
 
 def test_wire_datasource_partitioned_read(spark, pg_local):
-    """The pgwire DataSource opens ONE SERVER CURSOR PER TASK with
+    """A partitioned wire read opens ONE SERVER CURSOR PER TASK with
     disjoint range predicates (jdbc.py's partitioned-extract contract)
     — vs the reference's single connection (src/lib.rs:46)."""
     from flaco_spark.sources.pgwire import read_sql_wire
@@ -494,18 +494,13 @@ def test_wire_auto_probed_bounds(spark, pg_local):
         )
 
 
-def test_wire_datasource_fetchsize_option(spark, pg_local):
-    """A fetchSize far below the partition row count changes the paging
+def test_wire_read_sql_fetchsize(spark, pg_local):
+    """A fetchsize far below the partition row count changes the paging
     cadence, never the result."""
-    from flaco_spark.sources.pgwire import register_pgwire_source
+    from flaco_spark.core import read_sql
 
-    register_pgwire_source(spark)
-    df = (
-        spark.read.format("pgwire")
-        .option("uri", _uri(pg_local))
-        .option("query", "SELECT id FROM series")
-        .option("fetchSize", "137")
-        .load()
+    df = read_sql(
+        _uri(pg_local), "SELECT id FROM series", spark=spark, via="pgwire", fetchsize=137
     )
     got = df.groupBy().agg({"id": "sum", "*": "count"}).collect()[0]
     assert got["count(1)"] == 5000
@@ -632,6 +627,61 @@ def test_driver_route_matches_spark_route(spark, pg_local, tmp_path, stmt):
             got = call()
             assert _server_sessions(monitor) - before == 1, kind
             _same_table(got, want)
+        if "ORDER BY id" in stmt:
+            # every typemap type through the partitioned mapInArrow route:
+            # one session for the bounds probe and Describe, one per task
+            before = _server_sessions(monitor)
+            got = read_sql(
+                uri, "SELECT * FROM typed", spark=spark, partition_column="id", num_partitions=3
+            ).toArrow()
+            assert _server_sessions(monitor) - before == 3 + 1
+            _same_table(got.sort_by("id"), read_sql_to_pyarrow(uri, stmt, spark=spark))
+
+
+def test_classpath_probe_runs_once_per_session(spark, pg_local, monkeypatch):
+    """Whether the PostgreSQL JDBC driver is on the classpath is asked
+    of the JVM once per SparkContext, not once per call."""
+    import weakref
+
+    from flaco_spark import core
+
+    lookups = []
+    jvm_lookup = core._pg_jdbc_driver_available
+    monkeypatch.setattr(core, "_PG_DRIVER_ON_CLASSPATH", weakref.WeakKeyDictionary())
+    monkeypatch.setattr(
+        core, "_pg_jdbc_driver_available", lambda s: lookups.append(s) or jvm_lookup(s)
+    )
+    for _ in range(2):
+        t = core.read_sql_to_pyarrow(_uri(pg_local), "SELECT 1 AS k", spark=spark)
+        assert t.to_pylist() == [{"k": 1}]
+    assert lookups == [spark]
+
+
+def test_feather_dir_zero_row_export_keeps_schema(spark, pg_local, tmp_path):
+    """A zero-row directory export leaves part-empty.arrow with the same
+    schema as the partition files of the non-empty export."""
+    import os
+
+    import pyarrow.feather as feather
+
+    from flaco_spark.core import FileFormat, read_sql, write_dataframe_to_file
+
+    def export(stmt, name):
+        path = str(tmp_path / name)
+        df = read_sql(
+            _uri(pg_local), stmt, spark=spark,
+            partition_column="id", num_partitions=2, lower_bound=1, upper_bound=4,
+        )
+        write_dataframe_to_file(df, path, FileFormat.Feather, single_file=False)
+        return {f: feather.read_table(os.path.join(path, f)) for f in sorted(os.listdir(path))}
+
+    full = export("SELECT * FROM typed", "full")
+    empty = export("SELECT * FROM typed WHERE false", "empty")
+    assert list(empty) == ["part-empty.arrow"]
+    assert empty["part-empty.arrow"].num_rows == 0
+    assert sum(t.num_rows for t in full.values()) == 3
+    for t in full.values():
+        assert t.schema == empty["part-empty.arrow"].schema
 
 
 # ---------------------------------------------------------------------------

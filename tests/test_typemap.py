@@ -322,87 +322,24 @@ def test_pgwire_binary_numeric_decode():
     assert str(got[0]) == str(fits)
 
 
-def test_pgwire_datasource_rejects_single_bound():
-    """A raw spark.read.format('pgwire') user who sets one of
-    lowerBound/upperBound without the other must get the same
-    EngineError read_sql_wire raises — not a silent probe that
-    overwrites the supplied bound (the two entry points diverged)."""
-    import pytest
-
-    from flaco_spark.errors import EngineError
-    from flaco_spark.sources.pgwire import _wire_datasource_classes
-
-    ds_cls = _wire_datasource_classes()
-    for opts in (
-        {"lowerbound": "0"},
-        {"upperbound": "100"},
-    ):
-        ds = ds_cls(
-            {
-                "uri": "postgresql://u@localhost:1/db",
-                "query": "SELECT 1 AS k",
-                "partitioncolumn": "k",
-                "numpartitions": "4",
-                **opts,
-            }
-        )
-        reader = ds.reader(None)
-        with pytest.raises(EngineError, match="BOTH"):
-            reader.partitions()
-
-
-def test_pgwire_datasource_rejects_inactive_partition_options():
-    """r8 ADVICE: bounds without partitionColumn (and numPartitions>1
-    without a column) were SILENTLY ignored — the same ambiguous-
-    options class the XOR guard targets; both refuse loudly.  Bounds
-    WITH a partitionColumn and numPartitions=1 are degenerate but
-    well-defined (one range partition covering everything) and must
-    PLAN, not raise — read_sql_wire itself produces that shape after
-    auto-probing (r9 review regression)."""
-    import pytest
-
-    from flaco_spark.errors import EngineError
-    from flaco_spark.sources.pgwire import _wire_datasource_classes
-
-    ds_cls = _wire_datasource_classes()
-    base = {"uri": "postgresql://u@localhost:1/db", "query": "SELECT 1 AS k"}
-    # bounds without partitionColumn
-    with pytest.raises(EngineError, match="without"):
-        ds_cls({**base, "lowerbound": "0", "upperbound": "9"}).reader(None).partitions()
-    # numPartitions>1 without partitionColumn
-    with pytest.raises(EngineError, match="partitionColumn"):
-        ds_cls({**base, "numpartitions": "4"}).reader(None).partitions()
-    # bounds with partitionColumn but numPartitions=1: one TRUE partition
-    parts = ds_cls(
-        {**base, "partitioncolumn": "k", "numpartitions": "1",
-         "lowerbound": "0", "upperbound": "9"}
-    ).reader(None).partitions()
-    assert len(parts) == 1 and parts[0].predicate == "TRUE"
-    # the plain single-partition shape still plans one TRUE partition
-    parts = ds_cls(base).reader(None).partitions()
-    assert len(parts) == 1 and parts[0].predicate == "TRUE"
-
-
 def test_read_sql_wire_rejects_partition_options_without_column(spark):
-    """The helper-level twin of the DataSource guard: partition
-    options without partition_column raise instead of being dropped."""
+    """Partition options that would be silently ignored, or a single
+    bound, raise before any connection is made (the URI points at a
+    closed port) instead of being dropped or overwritten by a probe."""
     import pytest
 
     from flaco_spark.errors import EngineError
     from flaco_spark.sources.pgwire import read_sql_wire
 
-    with pytest.raises(EngineError, match="without"):
-        read_sql_wire(
-            spark,
-            "postgresql://u@localhost:1/db",
-            "SELECT 1 AS k",
-            num_partitions=4,
-        )
-    with pytest.raises(EngineError, match="without"):
-        read_sql_wire(
-            spark,
-            "postgresql://u@localhost:1/db",
-            "SELECT 1 AS k",
-            lower_bound=0,
-            upper_bound=9,
-        )
+    partitioned = {"partition_column": "k", "num_partitions": 4}
+    for options, match in (
+        ({"num_partitions": 4}, "without"),
+        ({"num_partitions": 4}, "partitionColumn"),
+        ({"lower_bound": 0, "upper_bound": 9}, "without"),
+        ({**partitioned, "lower_bound": 0}, "BOTH"),
+        ({**partitioned, "upper_bound": 100}, "BOTH"),
+    ):
+        with pytest.raises(EngineError, match=match):
+            read_sql_wire(
+                spark, "postgresql://u@localhost:1/db", "SELECT 1 AS k", **options
+            )
