@@ -322,6 +322,44 @@ def test_pgwire_binary_numeric_decode():
     assert str(got[0]) == str(fits)
 
 
+def test_pgwire_datasource_rejects_single_bound():
+    """A pgwire read that sets one of lower_bound/upper_bound
+    (lowerBound/upperBound) without the other must raise — not run a
+    silent probe that overwrites the supplied bound."""
+    import pytest
+
+    from flaco_spark.errors import EngineError
+    from flaco_spark.sources.pgwire import check_partition_options
+
+    for lower, upper in ((0, None), (None, 100)):
+        with pytest.raises(EngineError, match="BOTH"):
+            check_partition_options("k", 4, lower, upper)
+    assert check_partition_options("k", 4, 0, 100)
+    assert check_partition_options("k", 4, None, None)  # bounds are probed
+
+
+def test_pgwire_datasource_rejects_inactive_partition_options():
+    """Bounds without a partition column, and num_partitions>1 without
+    one, would be silently ignored, so they raise.  Bounds with a
+    partition column and num_partitions=1 raise too: one partition reads
+    the whole result.  The plain shape plans one TRUE partition."""
+    import pytest
+
+    from flaco_spark.errors import EngineError
+    from flaco_spark.sources.pgwire import check_partition_options, range_predicates
+
+    with pytest.raises(EngineError, match="without"):
+        check_partition_options(None, None, 0, 9)
+    with pytest.raises(EngineError, match="partitionColumn"):
+        check_partition_options(None, 4, None, None)
+    with pytest.raises(EngineError, match="num_partitions=1"):
+        check_partition_options("k", 1, 0, 9)
+    assert not check_partition_options(None, None, None, None)
+    assert not check_partition_options(None, 1, None, None)
+    assert not check_partition_options("k", 1, None, None)
+    assert range_predicates("k", 1, 0, 9) == ["TRUE"]
+
+
 def test_read_sql_wire_rejects_partition_options_without_column(spark):
     """Partition options that would be silently ignored, or a single
     bound, raise before any connection is made (the URI points at a
