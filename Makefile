@@ -1,7 +1,7 @@
 # Dev workflow, mirroring the reference's Makefile targets
 # (/root/reference/Makefile: test / bench / memory profiling).
 
-.PHONY: test test-fast perf bench bench-small smoke gate gate10x probe staleness
+.PHONY: test test-fast perf perf-pairs bench bench-small smoke gate gate10x probe staleness
 
 test:            ## full suite (oracle parity + API + plans + streaming)
 	python -m pytest tests/ -q
@@ -13,6 +13,13 @@ test-fast:       ## everything except the slow differential suites
 perf:            ## the repo benchmark (BENCHMARK.json): both listed workloads once, seed 1, 30 s
 	python3 perfbench/run.py --workload wide_extract --seed 1 --seconds 30 --trace 0
 	python3 perfbench/run.py --workload point_queries --seed 1 --seconds 30 --trace 0
+
+# PARENT is a checkout of the parent commit, e.g.
+#   git archive HEAD~1 | (mkdir -p ../parent && tar -x -C ../parent)
+PAIRS ?= 10
+WORKLOAD ?= wide_extract
+perf-pairs:      ## interleaved parent/change perfbench pairs: make perf-pairs PARENT=dir [WORKLOAD=w PAIRS=n]
+	python3 scripts/perf_pairs.py $(PARENT) --workload $(WORKLOAD) --pairs $(PAIRS)
 
 bench:           ## headline queries + extraction legs at sf0.1 (one JSON line)
 	python bench.py

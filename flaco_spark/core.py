@@ -23,10 +23,9 @@ instead of a single connection.
 from __future__ import annotations
 
 import enum
-import os
-import uuid
 import weakref
 from typing import TYPE_CHECKING
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -208,44 +207,36 @@ def read_sql_to_file(
     driver holds one page rather than the whole result; the file
     appears only once complete.  Each 16,384-row page becomes one
     Parquet row group (one IPC record batch), where the Spark route
-    writes a single row group: per-group dictionaries can make the
-    Parquet file larger when values repeat only across pages (+22% on
-    the benchmark's 200k-row table), while the groups read back
-    faster.  ``single_file=False`` writes a
-    directory of per-partition files through Spark — the shape that
-    actually scales.
+    writes a single row group.  Parquet dictionary-encodes only the
+    columns whose first page repeats values (at most half as many
+    distinct values as rows), as parquet-mr in effect does: a
+    dictionary per row group over unique values would cost ~2 B/row
+    per such column (78 B/row instead of 64 on the benchmark's 200k-row
+    table).  ``single_file=False`` writes a directory of per-partition
+    files through :func:`write_dataframe_to_file`, the shape that
+    actually scales; over pgwire each file is written inside its read
+    task.
     """
     spark = spark or get_session()
     if single_file and _use_wire(uri, "auto", spark):
-        _wire_to_file(uri, stmt, path, format)
+        from flaco_spark.sources.feather import write_file
+        from flaco_spark.sources.pgwire import wire_batches
+
+        with wire_batches(uri, stmt, ds_safe=True) as (schema, batches):
+            write_file(batches, path, format.value, schema)
         return
     df = read_sql(uri, stmt, spark=spark)
     write_dataframe_to_file(df, path, format=format, single_file=single_file)
 
 
-def _wire_to_file(uri: str, stmt: str, path: str, format: FileFormat) -> None:
-    """Stream ``stmt``'s pages from the wire into one file, written
-    under a temporary name beside ``path`` and renamed when complete."""
-    import pyarrow.ipc as ipc
-    import pyarrow.parquet as pq
+def _fused_read(df: DataFrame, path: str):
+    """The pgwire read ``df`` came straight from, when a directory
+    export of it can write its files inside the read tasks; else None."""
+    from flaco_spark.sources.pgwire import WIRE_READS
 
-    from flaco_spark.sources.pgwire import wire_batches
-
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    try:
-        with wire_batches(uri, stmt, ds_safe=True) as (schema, batches):
-            if format is FileFormat.Parquet:
-                writer = pq.ParquetWriter(tmp, schema, compression="snappy")
-            else:  # lz4, as pyarrow.feather.write_feather
-                options = ipc.IpcWriteOptions(compression="lz4")
-                writer = ipc.new_file(tmp, schema, options=options)
-            with writer:
-                for batch in batches:
-                    writer.write_batch(batch)
-            os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+    if df.is_cached or urlparse(path).scheme:
+        return None
+    return WIRE_READS.get(df)
 
 
 def write_dataframe_to_file(
@@ -257,18 +248,36 @@ def write_dataframe_to_file(
 ) -> None:
     """Sink an arbitrary DataFrame to Parquet or Feather/Arrow-IPC.
 
-    ``compression=None`` keeps each writer's default (snappy for the
-    distributed parquet path).  Pass ``"none"`` for byte-level flaco
-    parity — the reference writes UNCOMPRESSED parquet
-    (src/lib.rs:125-129).  Measured: skipping the codec helps only the
-    single-file driver funnel (~17% on one thread); the distributed
-    path is IO-bound with 32 parallel writers and snappy's smaller
-    bytes WIN there — which is why snappy stays the default.
+    ``compression=None`` keeps each writer's default (snappy Parquet,
+    lz4 Feather).  Pass ``"none"`` for byte-level flaco parity — the
+    reference writes UNCOMPRESSED parquet (src/lib.rs:125-129) and IPC.
+    Measured: skipping the codec helps only the single-file driver
+    funnel (~17% on one thread); the distributed path is IO-bound with
+    32 parallel writers and snappy's smaller bytes WIN there — which is
+    why snappy stays the default.
+
+    ``single_file=False`` writes a directory, replacing any earlier one.
+    When ``df`` is the very frame a pgwire :func:`read_sql` returned
+    (not transformed, not cached) and ``path`` has no URI scheme, the
+    export is fused with the read: one Spark job whose tasks each
+    stream their range's wire pages into ``part-NNNNN.parquet`` /
+    ``part-NNNNN.arrow``, with no JVM rows in between
+    (:func:`flaco_spark.sources.feather.export_dir`).  A zero-row export
+    leaves ``part-empty.<ext>`` carrying the schema, a Parquet export
+    ends with ``_SUCCESS``, and a failed one leaves no file of its own
+    and any earlier export in place.  Every other frame goes through
+    Spark's Parquet writer (``mode("overwrite")``) or the Feather
+    ``mapInArrow`` writer.
     """
-    from flaco_spark.sources.feather import write_feather
+    from flaco_spark.sources.feather import export_dir, write_feather
 
     try:
-        if format is FileFormat.Parquet:
+        wire = None if single_file else _fused_read(df, path)
+        if wire is not None:
+            n = wire.partitions
+            ids = df.sparkSession.range(0, n, 1, n)
+            export_dir(ids, path, format.value, wire.schema, read=wire.read, compression=compression)
+        elif format is FileFormat.Parquet:
             if single_file:
                 # Reference writes ONE file with ONE row group
                 # (src/lib.rs:124-140). We keep the one-file shape but let
@@ -284,7 +293,7 @@ def write_dataframe_to_file(
                     w = w.option("compression", compression)
                 w.parquet(path)
         elif format is FileFormat.Feather:
-            write_feather(df, path, single_file=single_file)
+            write_feather(df, path, single_file=single_file, compression=compression)
         else:  # pragma: no cover
             raise ValueError(f"unsupported format: {format}")
     except EngineError:

@@ -62,6 +62,8 @@ import socket
 import ssl
 import struct
 import uuid
+import weakref
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from datetime import date, datetime, time, timedelta, timezone
 from decimal import Decimal
@@ -1389,6 +1391,22 @@ def _probe_bounds(conn: PgWireConnection, stmt: str, partition_column: str):
     return int(lo), int(hi) + 1
 
 
+@dataclass(frozen=True)
+class WireRead:
+    """How :func:`read_sql_wire` built a DataFrame: ``read(i)`` yields
+    the Arrow batches of partition ``i`` of ``partitions``, all with
+    ``schema``."""
+
+    read: Callable[[int], Iterator[pa.RecordBatch]]
+    partitions: int
+    schema: pa.Schema
+
+
+# Each DataFrame read_sql_wire returned → its WireRead.  A transformed
+# frame is a new object and is not here; entries go with their frames.
+WIRE_READS = weakref.WeakKeyDictionary()
+
+
 def read_sql_wire(
     spark,
     uri: str,
@@ -1408,7 +1426,10 @@ def read_sql_wire(
     survives zero-row results.  Each range predicate then becomes one
     task of ``spark.range(n).mapInArrow``, which opens its own server
     portal and yields one Arrow batch per Execute page of at most
-    ``fetchsize`` rows, so task memory stays bounded by the page."""
+    ``fetchsize`` rows, so task memory stays bounded by the page.  The
+    returned frame is recorded in :data:`WIRE_READS`, so a directory
+    export of it can write each partition's file inside its read task
+    (:func:`flaco_spark.core.write_dataframe_to_file`)."""
     partitioned = check_partition_options(
         partition_column, num_partitions, lower_bound, upper_bound
     )
@@ -1416,25 +1437,31 @@ def read_sql_wire(
     with PgWireConnection(info) as conn:
         if partitioned and lower_bound is None:
             lower_bound, upper_bound = _probe_bounds(conn, stmt, partition_column)
-        schema = _spark_schema_for(conn.describe(stmt), ds_safe=True)
+        fields = conn.describe(stmt)
+    schema = _spark_schema_for(fields, ds_safe=True)
     preds = (
         range_predicates(partition_column, num_partitions, int(lower_bound), int(upper_bound))
         if partitioned
         else ["TRUE"]
     )
 
+    def read_partition(i: int):
+        # runs in Spark's reused Python workers: no process per call
+        with PgWireConnection(info) as conn:
+            _, batches = conn.query_batches(
+                f"SELECT * FROM ({stmt}) flaco_subq WHERE {preds[i]}",
+                fetchsize,
+                ds_safe=True,
+            )
+            yield from batches
+
     def read(ids):
-        # Each range value names one predicate; Spark's reused Python
-        # workers run this, so no process is spawned per call.
+        # each range value names one predicate
         for chunk in ids:
             for i in chunk.column(0).to_pylist():
-                with PgWireConnection(info) as conn:
-                    _, batches = conn.query_batches(
-                        f"SELECT * FROM ({stmt}) flaco_subq WHERE {preds[i]}",
-                        fetchsize,
-                        ds_safe=True,
-                    )
-                    yield from batches
+                yield from read_partition(i)
 
     n = len(preds)
-    return spark.range(0, n, 1, n).mapInArrow(read, schema)
+    df = spark.range(0, n, 1, n).mapInArrow(read, schema)
+    WIRE_READS[df] = WireRead(read_partition, n, arrow_schema_for(fields, ds_safe=True))
+    return df

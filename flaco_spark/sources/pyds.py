@@ -116,11 +116,11 @@ class _FeatherCommit(WriterCommitMessage):
 class FeatherDirWriter(DataSourceWriter):
     """One Arrow IPC file per partition task.
 
-    Tasks write straight to a uniquely-named final file (uuid suffix:
-    task retries cannot collide), and commit/abort bookkeeping happens
-    on the driver — abort removes the reported files, giving
-    best-effort cleanup rather than staged-rename atomicity; a
-    production sink would stage to a temp dir and rename on commit.
+    Tasks write uniquely-named files (uuid suffix: task retries cannot
+    collide) through the one file writer,
+    :func:`flaco_spark.sources.feather.write_file`, so each file appears
+    complete or not at all; commit/abort bookkeeping happens on the
+    driver, and abort removes the reported files.
     """
 
     def __init__(self, options: dict, schema) -> None:
@@ -134,6 +134,8 @@ class FeatherDirWriter(DataSourceWriter):
         from pyspark import TaskContext
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        from flaco_spark.sources.feather import write_file
+
         pid = TaskContext.get().partitionId()
         arrow_schema = to_arrow_schema(self.schema)
         names = [f.name for f in arrow_schema]
@@ -143,17 +145,14 @@ class FeatherDirWriter(DataSourceWriter):
             for i, name in enumerate(names):
                 cols[i].append(row[i])
             n += 1
-        tbl = pa.table(
-            {name: pa.array(vals, arrow_schema.field(i).type)
-             for i, (name, vals) in enumerate(zip(names, cols))},
+        batch = pa.record_batch(
+            [pa.array(vals, f.type) for vals, f in zip(cols, arrow_schema)],
             schema=arrow_schema,
         )
         out = os.path.join(
             self.path, f"part-{pid:05d}-{_uuid.uuid4().hex[:8]}.arrow"
         )
-        with pa.OSFile(out, "wb") as sink:
-            with pa.ipc.new_file(sink, arrow_schema) as writer:
-                writer.write_table(tbl)
+        write_file([batch], out, "feather")
         return _FeatherCommit(out, n)
 
     def commit(self, messages) -> None:

@@ -684,6 +684,227 @@ def test_feather_dir_zero_row_export_keeps_schema(spark, pg_local, tmp_path):
         assert t.schema == empty["part-empty.arrow"].schema
 
 
+def _read_back(spark, path, fmt):
+    from flaco_spark.core import FileFormat
+    from flaco_spark.sources.feather import read_feather
+
+    return spark.read.parquet(path) if fmt is FileFormat.Parquet else read_feather(spark, path)
+
+
+def _wire_read(spark, pg, stmt, n, bounds=(None, None)):
+    from flaco_spark.core import read_sql
+
+    return read_sql(
+        _uri(pg), stmt, spark=spark, partition_column="id", num_partitions=n,
+        lower_bound=bounds[0], upper_bound=bounds[1],
+    )
+
+
+@pytest.mark.parametrize("fused", [True, False], ids=["fused", "generic"])
+@pytest.mark.parametrize("fmt", ["Parquet", "Feather"])
+def test_dir_export_replaces_directory(spark, pg_local, tmp_path, fmt, fused):
+    """A directory export replaces what an earlier export left, as
+    mode("overwrite") does: 4 partitions then 2 into the same path, and
+    a zero-row export then a non-empty one, read back each row once."""
+    from flaco_spark.core import FileFormat, write_dataframe_to_file
+
+    fmt = FileFormat[fmt]
+    path = str(tmp_path / "out")
+    for where, n, want in [("TRUE", 4, 5000), ("TRUE", 2, 5000), ("id < 0", 2, 0), ("id <= 10", 2, 10)]:
+        df = _wire_read(spark, pg_local, f"SELECT * FROM series WHERE {where}", n, (1, 5001))
+        write_dataframe_to_file(df if fused else df.select("*"), path, fmt, single_file=False)
+        assert _read_back(spark, path, fmt).count() == want, (where, n)
+
+
+@pytest.mark.parametrize("fmt", ["Parquet", "Feather"])
+def test_fused_export_matches_generic_route(spark, pg_local, tmp_path, fmt):
+    """Every typemap type: the fused export (the file written inside
+    each read task) reads back with the same schema and values as the
+    generic route's (Spark's writer, or Feather's mapInArrow writer),
+    and opens one server session per partition plus one for planning."""
+    from flaco_spark.core import FileFormat, write_dataframe_to_file
+    from flaco_spark.sources.pgwire import PgWireConnection, parse_pg_uri
+
+    fmt = FileFormat[fmt]
+    with PgWireConnection(parse_pg_uri(_uri(pg_local))) as monitor:
+        before = _server_sessions(monitor)
+        df = _wire_read(spark, pg_local, "SELECT * FROM typed", 3)
+        write_dataframe_to_file(df, str(tmp_path / "fused"), fmt, single_file=False)
+        assert _server_sessions(monitor) - before == 3 + 1
+    write_dataframe_to_file(df.select("*"), str(tmp_path / "generic"), fmt, single_file=False)
+
+    fused = _read_back(spark, str(tmp_path / "fused"), fmt)
+    generic = _read_back(spark, str(tmp_path / "generic"), fmt)
+    assert fused.schema == generic.schema
+    if fmt is FileFormat.Parquet:
+        assert fused.schema == df.schema
+    _same_table(fused.toArrow().sort_by("id"), generic.toArrow().sort_by("id"))
+    assert fused.count() == 3
+
+
+def test_fused_export_zero_rows(spark, pg_local, tmp_path):
+    """A zero-row fused Parquet export leaves only part-empty.parquet and
+    _SUCCESS, which read back through spark.read.parquet with the
+    frame's schema."""
+    import os
+
+    from flaco_spark.core import FileFormat, write_dataframe_to_file
+
+    path = str(tmp_path / "empty")
+    df = _wire_read(spark, pg_local, "SELECT * FROM typed WHERE false", 3, (1, 4))
+    write_dataframe_to_file(df, path, FileFormat.Parquet, single_file=False)
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "part-empty.parquet"]
+    back = spark.read.parquet(path)
+    assert back.schema == df.schema
+    assert back.count() == 0
+
+
+def test_fused_export_file_layout(spark, pg_local, tmp_path):
+    """A fused Parquet export names its files by partition and ends with
+    _SUCCESS, as Spark's committer does; no temporary file remains."""
+    import os
+
+    from flaco_spark.core import FileFormat, write_dataframe_to_file
+
+    path = str(tmp_path / "out")
+    write_dataframe_to_file(
+        _wire_read(spark, pg_local, "SELECT * FROM series", 3), path, FileFormat.Parquet,
+        single_file=False,
+    )
+    assert sorted(os.listdir(path)) == [
+        "_SUCCESS", "part-00000.parquet", "part-00001.parquet", "part-00002.parquet",
+    ]
+
+
+def test_fused_route_selection(spark, pg_local, tmp_path, monkeypatch):
+    """Only the unchanged frame a pgwire read_sql returned, uncached and
+    with a local path, reaches the fused route; everything else goes to
+    Spark's writer or the Feather mapInArrow writer.  A compression
+    codec does not change the route.  Spies stand in for every writer,
+    so nothing is written (least of all to S3)."""
+    from flaco_spark.core import FileFormat, write_dataframe_to_file
+    from flaco_spark.sources import feather
+
+    calls = []
+
+    class SparkWriter:
+        def mode(self, m):
+            return self
+
+        def option(self, k, v):
+            return self
+
+        def parquet(self, path):
+            calls.append("spark")
+
+    monkeypatch.setattr(
+        feather, "export_dir",
+        lambda *a, read=None, compression=None: calls.append(
+            "generic" if read is None else "fused"
+        ),
+    )
+    monkeypatch.setattr(
+        feather, "write_feather",
+        lambda df, path, single_file, compression=None: calls.append("feather"),
+    )
+    df = _wire_read(spark, pg_local, "SELECT * FROM series", 2)
+    monkeypatch.setattr(type(df), "write", property(lambda self: SparkWriter()))
+    local = str(tmp_path / "out")
+
+    def route(frame, fmt, path=local, compression=None):
+        calls.clear()
+        write_dataframe_to_file(frame, path, fmt, single_file=False, compression=compression)
+        return calls
+
+    cached = _wire_read(spark, pg_local, "SELECT * FROM series", 2)
+    cached.cache()
+    try:
+        for fmt, generic in [(FileFormat.Parquet, "spark"), (FileFormat.Feather, "feather")]:
+            assert route(df, fmt) == ["fused"]
+            assert route(df.select("*"), fmt) == [generic]
+            assert route(df.select("id"), fmt) == [generic]
+            assert route(cached, fmt) == [generic]
+            assert route(df, fmt, compression="none") == ["fused"]
+            assert route(df, fmt, path="s3a://bucket/flaco/out") == [generic]
+            assert route(df, fmt, path="file:///tmp/flaco/out") == [generic]
+    finally:
+        cached.unpersist()
+
+
+@pytest.mark.parametrize("fmt", ["Parquet", "Feather"])
+def test_failed_export_raises_and_cleans_up(spark, pg_local, tmp_path, fmt):
+    """A server error mid-stream in one partition's range (division by
+    zero at id 2) fails the export with an EngineError naming it, and
+    leaves no part file and no _SUCCESS behind; over an earlier export,
+    the earlier one stays as it was."""
+    import os
+
+    from flaco_spark.core import FileFormat, write_dataframe_to_file
+    from flaco_spark.errors import EngineError
+
+    fmt = FileFormat[fmt]
+    fresh, earlier = str(tmp_path / "fresh"), str(tmp_path / "earlier")
+    write_dataframe_to_file(
+        _wire_read(spark, pg_local, "SELECT id FROM series", 2), earlier, fmt, single_file=False
+    )
+    df = _wire_read(spark, pg_local, "SELECT id, 1000 / (id - 2) AS q FROM series", 3)
+    for path in (fresh, earlier):
+        with pytest.raises(EngineError, match="division by zero"):
+            write_dataframe_to_file(df, path, fmt, single_file=False)
+    assert sorted(os.listdir(tmp_path)) == ["earlier"]
+    back = _read_back(spark, earlier, fmt)
+    assert back.columns == ["id"]
+    assert back.count() == 5000
+
+
+def test_feather_dir_export_over_its_own_input(spark, pg_local, tmp_path):
+    """A Feather directory read back and exported, filtered, to the same
+    path: the job still finds its input files, and the path then holds
+    the filtered rows."""
+    from flaco_spark.sources.feather import read_feather, write_feather
+
+    path = str(tmp_path / "out")
+    write_feather(_wire_read(spark, pg_local, "SELECT * FROM series", 3), path, single_file=False)
+    df = read_feather(spark, path)
+    write_feather(df.filter("id <= 10"), path, single_file=False)
+    back = read_feather(spark, path).toArrow().sort_by("id")
+    assert back.column("id").to_pylist() == list(range(1, 11))
+
+
+@pytest.mark.parametrize("fused", [True, False], ids=["fused", "generic"])
+@pytest.mark.parametrize("fmt", ["Parquet", "Feather"])
+def test_dir_export_honours_compression(spark, pg_local, tmp_path, fmt, fused):
+    """compression="none" writes uncompressed files on every directory
+    route, and the default writes snappy Parquet / lz4 Feather."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from flaco_spark.core import FileFormat, write_dataframe_to_file
+
+    fmt = FileFormat[fmt]
+    df = _wire_read(spark, pg_local, "SELECT * FROM series", 2)
+    size = {}
+    for codec in (None, "none"):
+        path = str(tmp_path / str(codec))
+        write_dataframe_to_file(
+            df if fused else df.select("*"), path, fmt, single_file=False, compression=codec
+        )
+        parts = glob.glob(os.path.join(path, "part-*"))
+        size[codec] = sum(os.path.getsize(p) for p in parts)
+        if fmt is FileFormat.Parquet:
+            used = {
+                md.row_group(i).column(j).compression
+                for md in (pq.ParquetFile(p).metadata for p in parts)
+                for i in range(md.num_row_groups)
+                for j in range(md.num_columns)
+            }
+            assert used == {"SNAPPY" if codec is None else "UNCOMPRESSED"}
+        assert _read_back(spark, path, fmt).count() == 5000
+    assert size["none"] > size[None]
+
+
 # ---------------------------------------------------------------------------
 # JDBC variant — still jar-gated (unchanged contract: goes live the
 # day org.postgresql.Driver appears on the classpath)
