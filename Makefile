@@ -1,7 +1,7 @@
 # Dev workflow, mirroring the reference's Makefile targets
 # (/root/reference/Makefile: test / bench / memory profiling).
 
-.PHONY: test test-fast perf perf-pairs bench bench-small smoke gate gate10x probe staleness
+.PHONY: test test-fast test-wire perf perf-pairs bench bench-small smoke gate gate10x probe staleness
 
 test:            ## full suite (oracle parity + API + plans + streaming)
 	python -m pytest tests/ -q
@@ -9,6 +9,10 @@ test:            ## full suite (oracle parity + API + plans + streaming)
 test-fast:       ## everything except the slow differential suites
 	python -m pytest tests/ -q --ignore=tests/test_oracle_parity.py \
 	    --ignore=tests/test_property_differential.py
+
+test-wire:       ## the wire client: page decode vs its oracle, framing vs a fake backend, live PostgreSQL (~1.5 min)
+	python -m pytest tests/test_pgwire_decode.py tests/test_pgwire_framing.py \
+	    tests/test_live_pg.py -q
 
 perf:            ## the repo benchmark (BENCHMARK.json): both listed workloads once, seed 1, 30 s
 	python3 perfbench/run.py --workload wide_extract --seed 1 --seconds 30 --trace 0

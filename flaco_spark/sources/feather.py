@@ -240,9 +240,7 @@ def read_feather(spark: SparkSession, path: str) -> DataFrame:
                     for i in range(reader.num_record_batches):
                         yield reader.get_batch(i)
 
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        spark_schema = from_arrow_schema(probe_schema)
+        spark_schema = _spark_schema(probe_schema)
         return binary.select("content").mapInArrow(_parse, schema=spark_schema)
 
     import pyarrow.feather as feather
@@ -251,4 +249,12 @@ def read_feather(spark: SparkSession, path: str) -> DataFrame:
     # Spark 4 accepts a pyarrow Table directly — no pandas round-trip,
     # better type fidelity (e.g. int columns with NULLs stay ints
     # instead of pandas' float64 coercion).
-    return spark.createDataFrame(table)
+    return spark.createDataFrame(table, schema=_spark_schema(table.schema))
+
+
+def _spark_schema(schema: pa.Schema):
+    """The Spark schema of a Feather file: a tz-naive Arrow timestamp is
+    TIMESTAMP_NTZ, as ``read_sql`` types a PostgreSQL ``timestamp``."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True)

@@ -31,23 +31,27 @@ Decode: Arrow results are read through a server-side PORTAL
 (extended protocol, ``Execute(max_rows=fetch_rows)``) with every
 column in BINARY result format — the representation rust-postgres
 consumes — and the next page is requested before the current one is
-decoded.  Each Execute page is read into one ``bytearray``; one Python
-pass walks the message framing, then numpy gathers each column's
-length fields and values at per-row offsets and builds Arrow arrays
-straight from those buffers (:func:`_decode_page`), the row→column
-transpose the reference does into arrow2 builders.  No per-value
-Python object is made for scalar columns; arrays, uuid and numerics
-wider than 18 digits walk their values in Python, from the same page
-buffer.  A reader holds one page and its Arrow batch at a time, so a
-billion-row extract stays flat in memory where the reference
-materializes the whole result (src/lib.rs:75,124).  The same batches
-feed the executor reader, the driver-side :func:`wire_query_to_arrow`
-and the driver-bound calls in :mod:`flaco_spark.core`; NUMERIC
-lands in decimal128(38,18) there, and a value it cannot hold raises.
-:meth:`PgWireConnection.query_paged` walks the same framing but
-returns Python rows, with NUMERIC as exact Decimals of any size.  The
-text decoders below serve the simple-query cycle
-(:meth:`PgWireConnection.query`).
+decoded.  Each Execute page is read into one ``bytearray`` whose
+DataRow framing numpy walks over all the bytes received at once
+(:func:`_walk_datarows`: length fields as jumps, the chain of messages
+by pointer doubling); numpy then gathers each column's length fields
+and values at per-row offsets, each field in one gather from an
+overlapping typed view of the page (:func:`_be`), and builds Arrow
+arrays straight from those buffers (:func:`_decode_page`), the
+row→column transpose the reference does into arrow2 builders.  No
+Python loop runs per row for scalar columns; arrays, uuid and
+numerics wider than 18 digits walk their values in Python, from the
+same page buffer.  A reader holds one page and its Arrow batch at a
+time, so a billion-row extract stays flat in memory where the
+reference materializes the whole result (src/lib.rs:75,124).  The
+same batches feed the executor reader, the driver-side
+:func:`wire_query_to_arrow` and the driver-bound calls in
+:mod:`flaco_spark.core`; NUMERIC lands in decimal128(38,18) there,
+and a value it cannot hold raises.  :meth:`PgWireConnection.query_paged`
+walks the same framing but returns Python rows, with NUMERIC as exact
+Decimals of any size.  The simple-query cycle
+(:meth:`PgWireConnection.query`, the bounds probe) returns its rows as
+text, undecoded.
 """
 
 from __future__ import annotations
@@ -57,7 +61,6 @@ import contextlib
 import hashlib
 import hmac
 import os
-import re
 import socket
 import ssl
 import struct
@@ -65,7 +68,6 @@ import uuid
 import weakref
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
-from datetime import date, datetime, time, timedelta, timezone
 from decimal import Decimal
 from urllib.parse import parse_qs, unquote, urlparse
 
@@ -144,170 +146,6 @@ def oid_type_name(oid: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Text-format value decode (one function per OID family), for the
-# simple-query cycle's text rows (:func:`_rows_to_arrow`)
-# ---------------------------------------------------------------------------
-
-_ISO_DUR = re.compile(
-    r"^(?P<sign>-?)P(?:(?P<days>-?\d+)D)?"
-    r"(?:T(?:(?P<h>-?\d+)H)?(?:(?P<m>-?\d+)M)?(?:(?P<s>-?\d+(?:\.\d+)?)S)?)?$"
-)
-
-
-def _dec_bool(v: str):
-    return v == "t"
-
-
-def _dec_bytea(v: str):
-    if v.startswith("\\x"):
-        return bytes.fromhex(v[2:])
-    raise EngineError(f"bytea escape-format output not supported: {v[:20]!r}")
-
-
-def _dec_char(v: str):
-    # PG "char" is a single byte (typemap maps it to ByteType); the
-    # text wire format is the raw byte itself.
-    if v == "":
-        return 0
-    b = v.encode("latin-1", errors="replace")
-    return b[0] if b[0] < 128 else b[0] - 256
-
-
-def _dec_numeric(v: str):
-    if v in ("NaN", "Infinity", "-Infinity"):
-        # DecimalType has no NaN; documented divergence (the reference
-        # would emit f64 NaN — our exact-decimal mode cannot).
-        return None
-    return Decimal(v)
-
-
-def _dec_date(v: str):
-    if v.endswith("infinity") or v.endswith("BC"):
-        raise EngineError(f"unrepresentable DATE value {v!r} (no Spark analogue)")
-    return date.fromisoformat(v)
-
-
-def _dec_timestamp(v: str):
-    if v.endswith("infinity") or v.endswith("BC"):
-        raise EngineError(f"unrepresentable TIMESTAMP value {v!r}")
-    return datetime.fromisoformat(v)
-
-
-def _dec_timestamptz(v: str):
-    if v.endswith("infinity") or v.endswith("BC"):
-        raise EngineError(f"unrepresentable TIMESTAMPTZ value {v!r}")
-    # connections pin TimeZone=UTC, so the offset is always +00 — but
-    # parse it anyway and normalize, never assume.
-    return datetime.fromisoformat(v).astimezone(timezone.utc)
-
-
-def _dec_time(v: str):
-    return time.fromisoformat(v)
-
-
-def _dec_timetz(v: str):
-    # Same divergence as the JDBC path (typemap.py): the offset is
-    # dropped after normalizing the value to UTC.
-    t = time.fromisoformat(v)
-    if t.tzinfo is None:
-        return t
-    dt = datetime.combine(date(2000, 1, 1), t).astimezone(timezone.utc)
-    return dt.time()
-
-
-def _dec_interval(v: str):
-    # connections pin IntervalStyle=iso_8601.  DayTimeIntervalType has
-    # no months field, so year/month components are an error — the
-    # honest mapping, vs. the reference keeping raw bytes
-    # (src/lib.rs:367-374).
-    if "Y" in v or re.search(r"\d+M(?![\dS])", v.split("T")[0]):
-        raise EngineError(
-            f"INTERVAL with year/month components has no exact "
-            f"DayTimeIntervalType mapping: {v!r}"
-        )
-    m = _ISO_DUR.match(v)
-    if not m:
-        raise EngineError(f"unparseable ISO-8601 interval {v!r}")
-    sign = -1 if m.group("sign") == "-" else 1
-    td = timedelta(
-        days=int(m.group("days") or 0),
-        hours=int(m.group("h") or 0),
-        minutes=int(m.group("m") or 0),
-        seconds=float(m.group("s") or 0),
-    )
-    return sign * td
-
-
-_DECODERS = {
-    "bool": _dec_bool,
-    "bytea": _dec_bytea,
-    '"char"': _dec_char,
-    "int2": int,
-    "int4": int,
-    "int8": int,
-    "oid": int,
-    "float4": float,  # float() accepts NaN/Infinity/-Infinity
-    "float8": float,
-    "numeric": _dec_numeric,
-    "date": _dec_date,
-    "timestamp": _dec_timestamp,
-    "timestamptz": _dec_timestamptz,
-    "time": _dec_time,
-    "timetz": _dec_timetz,
-    "interval": _dec_interval,
-}
-
-
-def decode_value(type_name: str, v: str | None):
-    """Decode one text-format wire value to its Python analogue."""
-    if v is None:
-        return None  # NULL stays NULL for EVERY type (§7.5 fix)
-    if type_name.endswith("[]"):
-        return [
-            decode_value(type_name[:-2], e) for e in _parse_array_literal(v)
-        ]
-    dec = _DECODERS.get(type_name)
-    return dec(v) if dec is not None else v  # text family passes through
-
-
-def _parse_array_literal(v: str) -> list[str | None]:
-    """Parse a one-dimensional PG array literal ``{a,"b,c",NULL}``."""
-    if not (v.startswith("{") and v.endswith("}")):
-        raise EngineError(f"unsupported array literal {v[:30]!r}")
-    body = v[1:-1]
-    out: list[str | None] = []
-    buf: list[str] = []
-    quoted = False
-    had_quote = False
-    i = 0
-    while i < len(body):
-        ch = body[i]
-        if quoted:
-            if ch == "\\":
-                buf.append(body[i + 1])
-                i += 2
-                continue
-            if ch == '"':
-                quoted = False
-            else:
-                buf.append(ch)
-        elif ch == '"':
-            quoted = True
-            had_quote = True
-        elif ch == ",":
-            s = "".join(buf)
-            out.append(None if (s == "NULL" and not had_quote) else s)
-            buf, had_quote = [], False
-        else:
-            buf.append(ch)
-        i += 1
-    if buf or had_quote or body:
-        s = "".join(buf)
-        out.append(None if (s == "NULL" and not had_quote) else s)
-    return out
-
-
-# ---------------------------------------------------------------------------
 # Page decode: binary DataRows → Arrow arrays (extended protocol, result
 # format 1).  The binary layouts are the PUBLIC send-function formats
 # from the protocol docs.  Every step works on whole columns: per-row
@@ -349,10 +187,13 @@ _WIDTH = {
 
 def _be(u8: np.ndarray, at: np.ndarray, code: str, start: int = 0) -> np.ndarray:
     """The big-endian field ``code`` (e.g. ``">i8"``) found ``start``
-    bytes past each offset in ``at``, as a native-order array."""
-    width = np.dtype(code).itemsize
-    rows = np.lib.stride_tricks.sliding_window_view(u8, width)[at + start]
-    return rows.view(code).reshape(-1).astype(code[1:])
+    bytes past each offset in ``at``, as a native-order array.  One
+    gather from a view of ``u8`` typed ``code`` at every byte offset
+    (stride 1, so its items overlap); an offset whose field would
+    overrun ``u8`` raises IndexError."""
+    dt = np.dtype(code)
+    typed = np.ndarray((max(len(u8) - dt.itemsize + 1, 0),), dt, u8, 0, (1,))
+    return typed[at + start].astype(code[1:])
 
 
 def _validity(valid: np.ndarray):
@@ -412,8 +253,10 @@ def _numeric_unscaled(u8, off, lens, valid):
     are not finite; they have no decimal analogue and become NULL
     (documented divergence)."""
     at = np.where(valid, off, 0)
-    nd, weight = _be(u8, at, ">i2").astype(np.int64), _be(u8, at, ">i2", 2).astype(np.int64)
-    sign, dscale = _be(u8, at, ">u2", 4), _be(u8, at, ">u2", 6)
+    head = _be(u8, at, ">u8")  # ndigits, weight (int16), sign, dscale (uint16)
+    nd = (head >> 48).astype(np.uint16).view(np.int16).astype(np.int64)
+    weight = (head >> 32).astype(np.uint16).view(np.int16).astype(np.int64)
+    sign, dscale = (head >> 16).astype(np.uint16), head.astype(np.uint16)
     _raise_if(valid & (lens != 8 + 2 * nd), "numeric value of inconsistent binary length")
     finite = valid & (sign != 0xC000) & (sign != 0xD000) & (sign != 0xF000)
     unknown = finite & (sign != 0x0000) & (sign != 0x4000)
@@ -652,14 +495,14 @@ def _column_values(tname: str, atype, page, u8, off, lens) -> list:
     return _decode_column(tname, atype, page, u8, off, lens).to_pylist()
 
 
-def _decode_page(page: bytearray, starts: list[int], fields, schema) -> pa.RecordBatch:
+def _decode_page(page: bytearray, starts, fields, schema) -> pa.RecordBatch:
     """DataRow messages of one page → one Arrow batch of ``schema``.
     ``starts`` holds the offset of each DataRow body in ``page``."""
     columns = _page_columns(page, starts, fields, schema, _decode_column)
     return pa.RecordBatch.from_arrays(columns, schema=schema)
 
 
-def _page_rows(page: bytearray, starts: list[int], fields, schema) -> list[list]:
+def _page_rows(page: bytearray, starts, fields, schema) -> list[list]:
     """DataRow messages of one page → rows of Python values."""
     columns = _page_columns(page, starts, fields, schema, _column_values)
     return [list(r) for r in zip(*columns)]
@@ -670,7 +513,7 @@ def _page_columns(page, starts, fields, schema, decode) -> list:
     value offsets and lengths (-1 = NULL) to
     ``decode(type_name, arrow_type, page, u8, off, lens)``."""
     u8 = np.frombuffer(page, np.uint8)
-    start = np.array(starts, np.int64)
+    start = np.asarray(starts, np.int64)
     try:
         end = start - 4 + _be(u8, start - 4, ">i4")  # length counts itself
         _raise_if(
@@ -749,6 +592,51 @@ _FLUSH = _msg(b"H")
 _SYNC = _msg(b"S")
 
 
+def _walk_datarows(buf: bytearray, pos: int, have: int) -> tuple[np.ndarray, int]:
+    """The run of complete DataRow messages from ``pos`` in
+    ``buf[:have]``: ``(offset of each DataRow body, offset of the first
+    message that is neither a complete DataRow nor a notice after
+    one)``.  ``pos`` must start a message.
+
+    Every 0x44 ('D') byte is a candidate message start and its length a
+    jump to the next message.  Candidates shorter than a zero-column
+    DataRow or ending past ``have`` are dropped, a jump that lands on a
+    complete NoticeResponse or ParameterStatus goes on past it, each
+    jump target is matched to a candidate, and the chain from ``pos``
+    is enumerated by pointer doubling: ``log2(rows)`` steps of numpy
+    work over the candidates.  A 0x44 byte inside a value is a
+    candidate too, but no link of a chain that starts on a message
+    lands on it."""
+    n = have - pos
+    u8 = np.frombuffer(buf, np.uint8, n, pos)
+    cand = np.flatnonzero(u8[: n - 4] == 0x44)
+    ends = cand + 1 + _be(u8, cand, ">i4", 1)
+    keep = (ends >= cand + 7) & (ends <= n)
+    cand, ends = cand[keep], ends[keep]
+    hop = np.flatnonzero(ends <= n - 5)
+    while len(hop):  # step over notices between rows, one message a round
+        kind = u8[ends[hop]]
+        hop = hop[(kind == 0x4E) | (kind == 0x53)]
+        past = ends[hop] + 1 + _be(u8, ends[hop], ">i4", 1)
+        whole = (past >= ends[hop] + 5) & (past <= n)
+        hop = hop[whole]
+        ends[hop] = past[whole]
+        hop = hop[ends[hop] <= n - 5]
+    del u8  # no view of ``buf`` may outlive the call: it must stay resizable
+    m = len(cand)
+    if not m or cand[0] != 0:
+        return np.empty(0, np.int64), pos
+    nxt = np.searchsorted(cand, ends)  # the candidate at each message end, if any
+    nxt[cand[np.minimum(nxt, m - 1)] != ends] = m
+    jump = np.append(nxt, m)  # m ends the chain and jumps to itself
+    chain = np.zeros(1, np.intp)
+    while chain[-1] != m:  # chain holds the first 2**k links; jump skips 2**k
+        chain = np.concatenate([chain, jump[chain]])
+        jump = jump[jump]
+    chain = chain[: np.searchsorted(chain, m)]  # links only rise along a chain
+    return cand[chain] + (pos + 5), pos + int(ends[chain[-1]])
+
+
 class PgWireConnection:
     """Minimal synchronous frontend for protocol 3.0.
 
@@ -805,29 +693,30 @@ class PgWireConnection:
         self._pos = end
         return bytes(self._buf[pos : pos + 1]), bytes(self._buf[pos + 5 : end])
 
-    def _read_page(self) -> tuple[bytearray, list[int], bool]:
+    def _read_page(self) -> tuple[bytearray, np.ndarray, bool]:
         """One Execute page: every message up to PortalSuspended or
         CommandComplete.  Returns the buffer holding it, the offset of
-        each DataRow body in it, and whether the portal is exhausted.
-        The buffer is handed over whole; the connection keeps only the
-        bytes after the page."""
-        buf, pos, starts = self._buf, self._pos, []
-        unpack, add = _I32.unpack_from, starts.append
-        have = len(buf)
+        each DataRow body in it (int64), and whether the portal is
+        exhausted.  Runs of DataRows are framed by
+        :func:`_walk_datarows` over all the bytes received so far; the
+        other messages are read one by one.  A message longer than the
+        bytes at hand is received whole before the next walk, so each
+        byte is walked about once.  The buffer is handed over whole;
+        the connection keeps only the bytes after the page."""
+        buf, pos, runs = self._buf, self._pos, []
         while True:
-            if have < pos + 5:
+            while len(buf) < pos + 5:
                 self._fill()
-                have = len(buf)
-                continue
-            end = pos + 1 + unpack(buf, pos + 1)[0]
-            if have < end:
+            mtype, end = buf[pos], pos + 1 + _I32.unpack_from(buf, pos + 1)[0]
+            if end < pos + 5:
+                raise EngineError(f"malformed {chr(mtype)!r} message in Execute")
+            while len(buf) < end:
                 self._fill()
-                have = len(buf)
-                continue
-            mtype = buf[pos]
-            if mtype == 0x44:  # DataRow
-                add(pos + 5)
-                pos = end
+            if mtype == 0x44:  # DataRow: frame every complete one at hand
+                starts, pos = _walk_datarows(buf, pos, len(buf))
+                if not len(starts):
+                    raise EngineError("malformed DataRow: shorter than its column count")
+                runs.append(starts)
                 continue
             # PortalSuspended (more rows) / CommandComplete / EmptyQuery
             if mtype in (0x73, 0x43, 0x49):
@@ -840,6 +729,7 @@ class PgWireConnection:
                 raise EngineError(f"unexpected {chr(mtype)!r} in Execute")
             pos = end
         self._buf, self._pos = buf[end:], 0
+        starts = np.concatenate(runs) if runs else np.empty(0, np.int64)
         return buf, starts, mtype != 0x73
 
     def _sendall(self, data: bytes) -> None:
@@ -1105,7 +995,7 @@ class PgWireConnection:
                 page, starts, done = self._read_page()
                 if not done:  # the server fills the next page meanwhile
                     self._sendall(execute)
-                if starts:
+                if len(starts):
                     yield page, starts
                 if done:
                     return
@@ -1251,18 +1141,6 @@ def arrow_schema_for(fields: list[tuple[str, int]], ds_safe: bool = False) -> pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(_spark_schema_for(fields, ds_safe=ds_safe))
-
-
-def _rows_to_arrow(fields: list[tuple[str, int]], rows: list[list[str | None]]):
-    """Decode TEXT rows (simple-query results) into a pyarrow Table
-    typed per the OID map."""
-    schema = arrow_schema_for(fields)
-    columns = []
-    for i, ((_, oid), f) in enumerate(zip(fields, schema)):
-        tname = oid_type_name(oid)
-        vals = [decode_value(tname, r[i]) for r in rows]
-        columns.append(pa.array(vals, type=f.type))
-    return pa.Table.from_arrays(columns, schema=schema)
 
 
 def wire_query_to_arrow(uri: str, stmt: str):

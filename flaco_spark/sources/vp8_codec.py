@@ -504,7 +504,8 @@ class FrameHeader:
 # uncompressed 10-byte tag (frame size, dimensions, part1_size) is
 # still parsed per call.
 _HDR_MEMO: dict[bytes, list] = {}
-_HDR_MEMO_MAX = 256
+_HDR_MEMO_MAX = 256  # keys
+_HDR_MEMO_PER_KEY = 8  # snapshots per key, oldest dropped first
 
 
 def parse_frame_header(data: bytes) -> FrameHeader:
@@ -677,17 +678,24 @@ def parse_frame_header(data: bytes) -> FrameHeader:
     h.prob_skip_false = bd.read_literal(8) if h.mb_no_skip else 0
 
     # memoize: key = the exact partition bytes the header consumed
-    # (value/range were built from part[:pos] only).  The snapshot's
-    # list fields are shared by every hit — downstream decode only
-    # reads them (do not mutate a FrameHeader after parse).
+    # (value/range were built from part[:pos] only).  A header that
+    # overran its partition read virtual zero bytes past it, which a
+    # longer stream extending the partition does not hold: never
+    # memoized.  The snapshot's list fields are shared by every hit —
+    # downstream decode only reads them (do not mutate a FrameHeader
+    # after parse).
     import copy
 
-    if len(_HDR_MEMO) >= _HDR_MEMO_MAX:
-        _HDR_MEMO.clear()
-    _HDR_MEMO.setdefault(bytes(part[:12]), []).append(
-        (bytes(part[: bd.pos]), copy.copy(h),
-         (bd.pos, bd.value, bd.range_, bd.bit_count))
-    )
+    if bd.pos <= len(part):
+        if len(_HDR_MEMO) >= _HDR_MEMO_MAX:
+            _HDR_MEMO.clear()
+        entries = _HDR_MEMO.setdefault(bytes(part[:12]), [])
+        if len(entries) >= _HDR_MEMO_PER_KEY:
+            del entries[0]
+        entries.append(
+            (bytes(part[: bd.pos]), copy.copy(h),
+             (bd.pos, bd.value, bd.range_, bd.bit_count))
+        )
 
     h.bd = bd  # continues with per-MB mode data
     return h

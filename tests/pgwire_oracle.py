@@ -236,17 +236,37 @@ def decode_page(page, starts, fields, ds_safe: bool = False) -> pa.Table:
     return rows_to_arrow(fields, decode_rows(page, starts, fields), ds_safe=ds_safe)
 
 
+def message(mtype: bytes, body: bytes = b"") -> bytes:
+    """One backend message: type byte, length (counting itself), body."""
+    return mtype + _I32.pack(len(body) + 4) + body
+
+
+def data_row(row: list[bytes | None]) -> bytes:
+    """A DataRow message of binary values (None = NULL)."""
+    body = struct.pack("!h", len(row))
+    for v in row:
+        body += _I32.pack(-1) if v is None else _I32.pack(len(v)) + v
+    return message(b"D", body)
+
+
 def page_of(rows: list[list[bytes | None]]) -> tuple[bytearray, list[int]]:
     """A page as the wire delivers it: one DataRow per row of binary
     values (None = NULL), then PortalSuspended.  Returns the page and
     the offset of each DataRow body."""
-    page, starts = bytearray(), []
-    for row in rows:
-        body = struct.pack("!h", len(row))
-        for v in row:
-            body += struct.pack("!i", -1) if v is None else struct.pack("!i", len(v)) + v
-        page += b"D" + struct.pack("!i", len(body) + 4)
-        starts.append(len(page))
-        page += body
-    page += b"s" + struct.pack("!i", 4)
-    return page, starts
+    page = bytearray().join(data_row(row) for row in rows) + message(b"s")
+    return page, walk_datarows(page)[0]
+
+
+def walk_datarows(page, pos: int = 0) -> tuple[list[int], int]:
+    """The framing walk of one Execute page, one message at a time, from
+    the message at ``pos`` to the first PortalSuspended, CommandComplete
+    or EmptyQuery: (offset of each DataRow body, end of that last
+    message).  Every other message is stepped over."""
+    starts = []
+    while True:
+        mtype, end = page[pos], pos + 1 + _I32.unpack_from(page, pos + 1)[0]
+        if mtype == 0x44:
+            starts.append(pos + 5)
+        elif mtype in b"sCI":
+            return starts, end
+        pos = end

@@ -3453,6 +3453,63 @@ def test_vp8_header_parse_and_error_surface():
         decode_vp8_frame(bytes(trunc[:20]))
 
 
+def test_vp8_header_memo_ignores_overrunning_headers():
+    """A first partition too short for its own header is parsed with
+    virtual zero bytes past its end; that parse must not be memoized,
+    or a longer stream extending the same bytes would reuse its coder
+    state.  Decoding such a stream first leaves the header and the
+    decode of the longer one unchanged.  Snapshots per memo key are
+    bounded."""
+    import numpy as np
+
+    from flaco_spark.sources import vp8_codec as vp8
+
+    def header_state(h):
+        bd = h.bd
+        return h.coeff_probs, h.prob_skip_false, (bd.pos, bd.value, bd.range_, bd.bit_count)
+
+    def decoded(data):
+        try:
+            return [np.asarray(x).tolist() for x in vp8.decode_vp8_frame(data)]
+        except Exception as exc:  # noqa: BLE001 — the outcome is compared
+            return repr(exc)
+
+    rng = np.random.RandomState(7)
+    frame = vp8.encode_vp8_frame(
+        *vp8.rgb_to_yuv420(rng.randint(0, 256, size=(16, 16, 3), dtype=np.uint8)), 16, 16
+    )
+    # a random first partition: its header reads many token-prob updates
+    part = rng.randint(0, 256, size=600, dtype=np.uint8).tobytes()
+
+    def stream(first: bytes) -> bytes:
+        return (len(first) << 5).to_bytes(3, "little") + frame[3:10] + first + frame[10:]
+
+    vp8._HDR_MEMO.clear()
+    want = header_state(vp8.parse_frame_header(stream(part)))
+    used = want[2][0]  # partition bytes the header reads
+    want_decoded = decoded(stream(part))
+    cut = used - 8
+    assert 12 <= cut and any(part[cut:used])
+
+    vp8._HDR_MEMO.clear()
+    assert vp8.parse_frame_header(stream(part[:cut])).bd.pos > cut  # the overrun
+    assert vp8._HDR_MEMO == {}
+    assert header_state(vp8.parse_frame_header(stream(part))) == want
+    vp8._HDR_MEMO.clear()
+    vp8.parse_frame_header(stream(part[:cut]))
+    assert decoded(stream(part)) == want_decoded
+
+    # streams sharing the key bytes but not the header: one snapshot
+    # each, at most _HDR_MEMO_PER_KEY kept under the key
+    vp8._HDR_MEMO.clear()
+    for v in range(1, 3 * vp8._HDR_MEMO_PER_KEY):
+        variant = bytearray(part)
+        variant[cut] ^= v
+        vp8.parse_frame_header(stream(bytes(variant)))
+    assert [len(e) for e in vp8._HDR_MEMO.values()] == [vp8._HDR_MEMO_PER_KEY]
+    vp8._HDR_MEMO.clear()
+
+
 def test_vp8_tables_structural_invariants():
     """The RFC 6386 table module's structural properties (provenance
     gate for the extracted constants): shapes, the hand-transcribable

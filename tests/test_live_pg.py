@@ -379,37 +379,6 @@ def test_wire_paging_midstream_error_surfaces_and_recovers(pg_local):
         assert rows == [["5000"]]  # connection recovered
 
 
-def test_wire_binary_text_paths_agree(pg_local):
-    """Differential: the binary extended path (wire_query_to_arrow →
-    the columnar page decoder) and the simple-query text path
-    (_rows_to_arrow over conn.query) must produce IDENTICAL Arrow tables
-    over every OID arm — including NaN floats, exact NUMERIC, tz
-    normalization, intervals and arrays."""
-    from flaco_spark.sources.pgwire import (
-        PgWireConnection,
-        _rows_to_arrow,
-        parse_pg_uri,
-        wire_query_to_arrow,
-    )
-
-    stmt = "SELECT * FROM typed ORDER BY id"
-    t_bin = wire_query_to_arrow(_uri(pg_local), stmt)
-    with PgWireConnection(parse_pg_uri(_uri(pg_local))) as conn:
-        fields, rows = conn.query(stmt)
-        t_txt = _rows_to_arrow(fields, rows)
-    assert t_bin.schema == t_txt.schema
-    # NaN != NaN under Arrow equals; compare via pylist with math.isnan
-    import math
-
-    for c in t_bin.column_names:
-        a, b = t_bin[c].to_pylist(), t_txt[c].to_pylist()
-        for x, y in zip(a, b):
-            if isinstance(x, float) and math.isnan(x):
-                assert math.isnan(y), c
-            else:
-                assert x == y, (c, x, y)
-
-
 def test_wire_timetz_text_fallback(pg_local):
     """timetz decodes beside other columns (binary, like every column)
     and the value normalizes to UTC."""
@@ -682,6 +651,26 @@ def test_feather_dir_zero_row_export_keeps_schema(spark, pg_local, tmp_path):
     assert sum(t.num_rows for t in full.values()) == 3
     for t in full.values():
         assert t.schema == empty["part-empty.arrow"].schema
+
+
+def test_read_feather_keeps_timestamp_ntz(spark, pg_local, tmp_path):
+    """A ``timestamp`` column exported to Feather, as one file and as a
+    directory, reads back with ``read_feather`` under the Spark schema
+    ``read_sql`` gave it: TIMESTAMP_NTZ, not the zoned TIMESTAMP."""
+    from pyspark.sql import types as T
+
+    from flaco_spark.core import FileFormat, read_sql, write_dataframe_to_file
+    from flaco_spark.sources.feather import read_feather
+
+    df = read_sql(_uri(pg_local), "SELECT id, ts, tstz FROM typed", spark=spark)
+    assert df.schema["ts"].dataType == T.TimestampNTZType()
+    want = df.orderBy("id").collect()
+    for single_file in (True, False):
+        path = str(tmp_path / ("ts.arrow" if single_file else "ts_dir"))
+        write_dataframe_to_file(df, path, FileFormat.Feather, single_file=single_file)
+        back = read_feather(spark, path)
+        assert back.schema == df.schema, single_file
+        assert back.orderBy("id").collect() == want
 
 
 def _read_back(spark, path, fmt):

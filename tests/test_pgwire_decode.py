@@ -115,9 +115,24 @@ def conn():
         with local_postgres(seed_sql=DIFF_DDL) as pg:
             uri = f"postgresql://postgres@127.0.0.1:{pg['port']}/postgres"
             with PgWireConnection(parse_pg_uri(uri)) as c:
+                c._read_page = _checked_read_page(c)
                 yield c
     except HarnessUnavailable as exc:
         pytest.skip(f"live-PG differential unavailable: {exc}")
+
+
+def _checked_read_page(c):
+    """``c._read_page`` that also requires the DataRow offsets of every
+    live page to be those of the oracle's sequential framing walk."""
+    read_page = c._read_page
+
+    def checked():
+        pos = c._pos
+        page, starts, done = read_page()
+        assert starts.tolist() == oracle.walk_datarows(page, pos)[0]
+        return page, starts, done
+
+    return checked
 
 
 def _canon(v):
@@ -339,3 +354,16 @@ def test_interval_out_of_int64_range_raises():
     for row in (iv(0, 200_000_000), iv(0, -(2**31)), iv(2**63 - 1, 1), iv(-(2**63), -1)):
         with pytest.raises(EngineError, match="INTERVAL value out of range"):
             _decode(fields, [row])
+
+
+def test_interval_with_months_raises():
+    """A binary INTERVAL with a month count has no DayTimeIntervalType
+    value; days and microseconds alone decode."""
+    fields = [("iv", 1186)]
+    ok = [[struct.pack("!qii", 5_000_000, -3, 0)], [None]]
+    page, starts = oracle.page_of(ok)
+    got = pa.Table.from_batches([_decode(fields, ok)])
+    _assert_same(got, oracle.decode_page(page, starts, fields))
+    for months in (1, -12):
+        with pytest.raises(EngineError, match="year/month"):
+            _decode(fields, [[struct.pack("!qii", 0, 0, months)]])

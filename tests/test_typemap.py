@@ -140,60 +140,6 @@ def test_pgwire_oid_names_align_with_typemap():
         assert elem_oid in OID_TO_NAME, arr_oid
 
 
-def test_pgwire_text_decoders():
-    import datetime as dt
-    import math
-    from decimal import Decimal
-
-    from flaco_spark.sources.pgwire import decode_value
-
-    assert decode_value("bool", "t") is True and decode_value("bool", "f") is False
-    assert decode_value("bytea", r"\xdeadbeef") == b"\xde\xad\xbe\xef"
-    assert decode_value("int8", "9007199254740993") == 9007199254740993
-    assert math.isnan(decode_value("float8", "NaN"))
-    assert decode_value("float4", "-Infinity") == float("-inf")
-    assert decode_value("numeric", "-9999.9999") == Decimal("-9999.9999")
-    assert decode_value("numeric", "NaN") is None  # DecimalType has no NaN
-    assert decode_value("date", "2024-03-01") == dt.date(2024, 3, 1)
-    assert decode_value("timestamp", "2024-03-01 06:15:30.123456") == dt.datetime(
-        2024, 3, 1, 6, 15, 30, 123456
-    )
-    got = decode_value("timestamptz", "2024-06-30 23:59:59.999999+02")
-    assert got.utcoffset() == dt.timedelta(0)  # normalized to UTC
-    assert got.replace(tzinfo=None) == dt.datetime(2024, 6, 30, 21, 59, 59, 999999)
-    assert decode_value("time", "06:15:30.5") == dt.time(6, 15, 30, 500000)
-    assert decode_value("interval", "P1DT2H3M4.5S") == dt.timedelta(
-        days=1, hours=2, minutes=3, seconds=4.5
-    )
-    assert decode_value("interval", "-PT1S") == dt.timedelta(seconds=-1)
-    assert decode_value("int4[]", "{1,NULL,-5}") == [1, None, -5]
-    assert decode_value("text[]", '{"y,z",NULL,"with \\"q\\""}') == [
-        "y,z",
-        None,
-        'with "q"',
-    ]
-    assert decode_value("text[]", "{}") == []
-    assert decode_value("text[]", '{NULL,"NULL"}') == [None, "NULL"]
-    # NULL stays NULL for every type (§7.5 fix)
-    assert decode_value("float8", None) is None
-
-
-def test_pgwire_interval_month_rejected():
-    import pytest as _pytest
-
-    from flaco_spark.errors import EngineError
-    from flaco_spark.sources.pgwire import decode_value
-
-    with _pytest.raises(EngineError, match="year/month"):
-        decode_value("interval", "P1M")
-    with _pytest.raises(EngineError, match="year/month"):
-        decode_value("interval", "P2Y1DT3H")
-    # minutes after T must NOT be mistaken for months
-    import datetime as dt
-
-    assert decode_value("interval", "PT5M") == dt.timedelta(minutes=5)
-
-
 def test_pgwire_uri_parsing():
     from flaco_spark.sources.pgwire import parse_pg_uri
 
