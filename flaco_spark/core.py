@@ -256,6 +256,10 @@ def write_dataframe_to_file(
     32 parallel writers and snappy's smaller bytes WIN there — which is
     why snappy stays the default.
 
+    ``single_file=True`` collects the frame on the driver and writes it
+    through :func:`flaco_spark.sources.feather.write_file`, so the file
+    appears only once complete.
+
     ``single_file=False`` writes a directory, replacing any earlier one.
     When ``df`` is the very frame a pgwire :func:`read_sql` returned
     (not transformed, not cached) and ``path`` has no URI scheme, the
@@ -269,7 +273,7 @@ def write_dataframe_to_file(
     Spark's Parquet writer (``mode("overwrite")``) or the Feather
     ``mapInArrow`` writer.
     """
-    from flaco_spark.sources.feather import export_dir, write_feather
+    from flaco_spark.sources.feather import export_dir, write_feather, write_file
 
     try:
         wire = None if single_file else _fused_read(df, path)
@@ -277,23 +281,18 @@ def write_dataframe_to_file(
             n = wire.partitions
             ids = df.sparkSession.range(0, n, 1, n)
             export_dir(ids, path, format.value, wire.schema, read=wire.read, compression=compression)
+        elif single_file:
+            # Reference writes ONE file (src/lib.rs:124-168); each batch
+            # Spark collects is one row group / record batch
+            table = df.toArrow()
+            write_file(table.to_batches(), path, format.value, table.schema, compression)
         elif format is FileFormat.Parquet:
-            if single_file:
-                # Reference writes ONE file with ONE row group
-                # (src/lib.rs:124-140). We keep the one-file shape but let
-                # parquet-mr pick row groups (strictly better).
-                import pyarrow.parquet as pq
-
-                pq.write_table(
-                    df.toArrow(), path, compression=compression or "snappy"
-                )
-            else:
-                w = df.write.mode("overwrite")
-                if compression is not None:
-                    w = w.option("compression", compression)
-                w.parquet(path)
+            w = df.write.mode("overwrite")
+            if compression is not None:
+                w = w.option("compression", compression)
+            w.parquet(path)
         elif format is FileFormat.Feather:
-            write_feather(df, path, single_file=single_file, compression=compression)
+            write_feather(df, path, single_file=False, compression=compression)
         else:  # pragma: no cover
             raise ValueError(f"unsupported format: {format}")
     except EngineError:

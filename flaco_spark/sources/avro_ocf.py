@@ -601,10 +601,13 @@ def read_container(fd) -> tuple[dict, list[tuple]]:
 
 
 def write_avro(df, path: str, codec: str = "deflate") -> None:
+    from flaco_spark.session import worker_task
+
     os.makedirs(path, exist_ok=True)
     schema = avro_schema_for(df.schema)
     spark_schema = df.schema
 
+    @worker_task
     def _write_partition(batches):
         import uuid
 
@@ -659,6 +662,8 @@ def _avro_files(path: str) -> list[str]:
 def _datasource_class():
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+    from flaco_spark.session import worker_task
+
     class _AvroFilePartition(InputPartition):
         def __init__(self, path: str) -> None:
             self.path = path
@@ -670,6 +675,7 @@ def _datasource_class():
         def partitions(self):
             return [_AvroFilePartition(f) for f in _avro_files(self.path)]
 
+        @worker_task
         def read(self, partition: "_AvroFilePartition"):
             # Yield one Arrow RecordBatch per Avro block (the pgwire
             # reader's Arrow-lane pattern): no per-row Python tuples

@@ -10,8 +10,9 @@ Spark has no built-in IPC sink, so this module supplies:
   codec or ``"none"``), opened on the first batch, written under
   a hidden ``.<name>.<uuid>.tmp`` name beside its target and
   ``os.replace``d onto it once complete.  The driver's single-file
-  wire route, every directory export and the ``feather_dir``
-  DataSource writer (:mod:`flaco_spark.sources.pyds`) write through it.
+  wire route, the single-file sinks of any frame, every directory
+  export and the ``feather_dir`` DataSource writer
+  (:mod:`flaco_spark.sources.pyds`) write through it.
 - :func:`export_dir` — a directory of per-partition files, written
   inside Spark tasks: ``part-NNNNN.parquet`` / ``part-NNNNN.arrow`` by
   partition, so a retried task replaces its file rather than adding
@@ -24,7 +25,7 @@ Spark has no built-in IPC sink, so this module supplies:
   reader, so pages go from the wire decoder straight into the file
   (:func:`flaco_spark.core.write_dataframe_to_file`).
 - :func:`write_feather` — ``single_file=True`` is the driver funnel
-  (``df.toArrow()`` → one ``.feather`` file, for results that fit on
+  (``df.toArrow()`` → :func:`write_file`, for results that fit on
   the driver, as every reference result must); ``single_file=False``
   is :func:`export_dir` over the frame's own partitions, each task
   streaming the batches Spark hands its ``mapInArrow`` to disk.
@@ -32,6 +33,10 @@ Spark has no built-in IPC sink, so this module supplies:
 The reader mirrors both shapes. The distributed read goes through
 ``spark.read.format("binaryFile")`` + ``mapInArrow`` so file contents
 are parsed on executors, not the driver.
+
+Every task function here (the part writer, the distributed reader)
+runs under :func:`flaco_spark.session.worker_task`, so the Python
+worker's next task does not re-read ``pyspark.zip``.
 """
 
 from __future__ import annotations
@@ -46,6 +51,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from flaco_spark.errors import EngineError
+from flaco_spark.session import worker_task
 
 EXTENSIONS = {"parquet": ".parquet", "feather": ".arrow"}
 SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
@@ -139,6 +145,7 @@ def _part_writer(path: str, fmt: str, read: Callable[[int], Iterator] | None, co
     part file per partition and yields its row count."""
     ext = EXTENSIONS[fmt]
 
+    @worker_task
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
@@ -202,10 +209,8 @@ def write_feather(
     df: DataFrame, path: str, single_file: bool = True, compression: str | None = None
 ) -> None:
     if single_file:
-        import pyarrow.feather as feather
-
         table = df.toArrow()
-        feather.write_feather(table, path, compression=_codec("feather", compression) or "uncompressed")
+        write_file(table.to_batches(), path, "feather", table.schema, compression)
         return
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -229,6 +234,7 @@ def read_feather(spark: SparkSession, path: str) -> DataFrame:
 
         probe_schema = feather.read_table(files[0]).schema
 
+        @worker_task
         def _parse(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
             import io
 

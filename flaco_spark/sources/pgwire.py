@@ -25,7 +25,9 @@ decode — and upgrades the reference on every §7.5 axis:
   predicates on the driver (the jdbc.py contract) and runs one
   ``mapInArrow`` task per predicate in Spark's reused Python workers;
   every task opens its OWN server cursor, where the reference is one
-  connection on one thread.
+  connection on one thread.  The task function runs under
+  :func:`flaco_spark.session.worker_task`, so the worker's next task
+  does not re-read ``pyspark.zip``.
 
 Decode: Arrow results are read through a server-side PORTAL
 (extended protocol, ``Execute(max_rows=fetch_rows)``) with every
@@ -964,7 +966,7 @@ class PgWireConnection:
         goes out before a page is handed on, so the server fills it
         while the caller decodes.  Normal completion, abandonment
         (close) and error all end with Sync, so the connection stays
-        reusable."""
+        reusable; a KeyboardInterrupt or SystemExit closes it instead."""
         if fetch_rows < 1:
             raise EngineError("fetch_rows must be >= 1")
         execute = _msg(b"E", b"\0" + _I32.pack(fetch_rows)) + _FLUSH
@@ -999,6 +1001,11 @@ class PgWireConnection:
                     yield page, starts
                 if done:
                     return
+        except (KeyboardInterrupt, SystemExit):
+            # a signal raised mid-I/O: bytes received may be lost, so the
+            # stream cannot be drained back to idle; drop the connection
+            self.close()
+            raise
         finally:
             try:
                 self._sendall(_SYNC)
@@ -1308,6 +1315,8 @@ def read_sql_wire(
     returned frame is recorded in :data:`WIRE_READS`, so a directory
     export of it can write each partition's file inside its read task
     (:func:`flaco_spark.core.write_dataframe_to_file`)."""
+    from flaco_spark.session import worker_task
+
     partitioned = check_partition_options(
         partition_column, num_partitions, lower_bound, upper_bound
     )
@@ -1333,6 +1342,7 @@ def read_sql_wire(
             )
             yield from batches
 
+    @worker_task
     def read(ids):
         # each range value names one predicate
         for chunk in ids:

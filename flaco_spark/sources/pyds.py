@@ -34,6 +34,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from flaco_spark.session import drop_archive_importers, worker_task
+
 
 class _FeatherFilePartition(InputPartition):
     def __init__(self, path: str) -> None:
@@ -52,6 +54,7 @@ class FeatherDirReader(DataSourceReader):
         )
         return [_FeatherFilePartition(f) for f in files]
 
+    @worker_task
     def read(self, partition: _FeatherFilePartition):
         import pyarrow as pa
 
@@ -128,6 +131,12 @@ class FeatherDirWriter(DataSourceWriter):
         self.schema = schema
 
     def write(self, iterator) -> "_FeatherCommit":
+        try:
+            return self._write(iterator)
+        finally:
+            drop_archive_importers()
+
+    def _write(self, iterator) -> "_FeatherCommit":
         import uuid as _uuid
 
         import pyarrow as pa

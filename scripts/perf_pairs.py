@@ -13,12 +13,15 @@ Every run's raw JSON line is printed as it finishes; at the end, each
 end-to-end metric in ``BENCHMARK.json`` gets its per-side median,
 quartiles, and the number of pairs the change wins (ties count for
 neither side).  Run it from the root of the working tree.
+On SIGTERM or Ctrl-C the signal is passed on to the current run, which
+is waited for, so its PostgreSQL and Spark are stopped before this exits.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import signal
 import statistics
 import subprocess
 import sys
@@ -27,15 +30,38 @@ from pathlib import Path
 TREE = Path(__file__).resolve().parents[1]
 
 
+class Stopped(BaseException):
+    """Raised in the main thread on SIGTERM or SIGINT (Ctrl-C)."""
+
+    def __init__(self, signum: int) -> None:
+        super().__init__(signum)
+        self.signum = signum
+
+
+def _stop(signum, frame):
+    raise Stopped(signum)
+
+
 def run_once(root: Path, workload: str, seed: int, seconds: float) -> dict | None:
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", workload,
         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0",
     ]
-    p = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
-    lines = p.stdout.strip().splitlines()
+    # its own session: a Ctrl-C at the terminal reaches the run only once,
+    # passed on from here
+    p = subprocess.Popen(
+        cmd, cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        start_new_session=True,
+    )
+    try:
+        out, err = p.communicate()
+    except Stopped as stop:
+        p.send_signal(stop.signum)
+        p.communicate()
+        raise
+    lines = out.strip().splitlines()
     if p.returncode != 0 or not lines:
-        print(f"# run failed in {root} (seed {seed}, exit {p.returncode}): {p.stderr[-800:]}", flush=True)
+        print(f"# run failed in {root} (seed {seed}, exit {p.returncode}): {err[-800:]}", flush=True)
         return None
     return json.loads(lines[-1])
 
@@ -75,14 +101,20 @@ def main() -> int:
     seconds = bench["run_seconds"]
     sides = {"parent": args.parent.resolve(), "change": TREE}
     pairs = []
-    for seed in range(1, args.pairs + 1):
-        order = ("parent", "change") if seed % 2 else ("change", "parent")
-        got = {}
-        for side in order:
-            got[side] = run_once(sides[side], args.workload, seed, seconds)
-            print(json.dumps({"side": side, "seed": seed, "workload": args.workload, "result": got[side]}), flush=True)
-        if got["parent"] and got["change"]:
-            pairs.append((got["parent"], got["change"]))
+    signal.signal(signal.SIGTERM, _stop)
+    signal.signal(signal.SIGINT, _stop)
+    try:
+        for seed in range(1, args.pairs + 1):
+            order = ("parent", "change") if seed % 2 else ("change", "parent")
+            got = {}
+            for side in order:
+                got[side] = run_once(sides[side], args.workload, seed, seconds)
+                print(json.dumps({"side": side, "seed": seed, "workload": args.workload, "result": got[side]}), flush=True)
+            if got["parent"] and got["change"]:
+                pairs.append((got["parent"], got["change"]))
+    except Stopped as stop:
+        print(f"# stopped by signal {stop.signum} after {len(pairs)} complete pairs", flush=True)
+        return 128 + stop.signum
     if not pairs:
         print("# no complete pair")
         return 1

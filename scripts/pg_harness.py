@@ -17,9 +17,11 @@ import contextlib
 import os
 import pwd
 import shutil
+import signal
 import socket
 import subprocess
 import tempfile
+import threading
 import time
 
 
@@ -65,12 +67,34 @@ class HarnessUnavailable(RuntimeError):
     """Raised (with the reason) when no local PG can be spawned."""
 
 
+def _exit_on_sigterm():
+    """On the main thread, make the next SIGTERM raise ``SystemExit``
+    (exit status 143), so the ``finally`` blocks it unwinds through run;
+    the handler then puts the previous one back, so a second SIGTERM acts
+    as before.  Returns the previous handler, or None off the main
+    thread, where no handler can be set."""
+    if threading.current_thread() is not threading.main_thread():
+        return None
+    previous = signal.getsignal(signal.SIGTERM)
+    if previous is None:  # set outside Python
+        previous = signal.SIG_DFL
+
+    def on_sigterm(signum, frame):
+        signal.signal(signal.SIGTERM, previous)
+        raise SystemExit(128 + signum)
+
+    signal.signal(signal.SIGTERM, on_sigterm)
+    return previous
+
+
 @contextlib.contextmanager
 def local_postgres(seed_sql: str | None = None):
     """Context manager yielding {"port", "cert", "base"} for a running
-    throwaway cluster; stops and deletes it on exit.  Raises
-    :class:`HarnessUnavailable` with a reason when the environment
-    cannot spawn one (callers translate to skip/exit)."""
+    throwaway cluster; stops and deletes it on exit, also when the
+    process gets SIGTERM on the main thread (it raises ``SystemExit``
+    there while the cluster is up).  Raises :class:`HarnessUnavailable`
+    with a reason when the environment cannot spawn one (callers
+    translate to skip/exit)."""
     reason = pg_binaries_reason()
     if reason:
         raise HarnessUnavailable(f"needs local PostgreSQL binaries: {reason}")
@@ -82,6 +106,7 @@ def local_postgres(seed_sql: str | None = None):
     base = tempfile.mkdtemp(prefix="flaco_pg_")
     data = os.path.join(base, "data")
     port = free_port()
+    previous = _exit_on_sigterm()
     try:
         if prefix:
             shutil.chown(base, user="postgres")
@@ -153,8 +178,12 @@ def local_postgres(seed_sql: str | None = None):
 
         yield {"port": port, "cert": crt, "base": base}
     finally:
+        if previous is not None:
+            signal.signal(signal.SIGTERM, signal.SIG_IGN)  # let the stop finish
         subprocess.run(
             [*(prefix or []), "pg_ctl", "-D", data, "-m", "immediate", "stop"],
             capture_output=True,
         )
         shutil.rmtree(base, ignore_errors=True)
+        if previous is not None:
+            signal.signal(signal.SIGTERM, previous)

@@ -365,6 +365,39 @@ def test_empty_result_keeps_schema(spark, simple_table, tmp_path):
     assert set(back.columns) == {"col1", "col2", "col3"}  # schema survives
 
 
+@pytest.mark.parametrize("fmt", [FileFormat.Parquet, FileFormat.Feather])
+def test_single_file_write_failure_leaves_no_file(spark, tmp_path, monkeypatch, fmt):
+    """A single-file sink that fails after its first batch leaves neither
+    a partial file at ``path`` nor its hidden temporary file."""
+    import os
+
+    from flaco_spark.sources import feather
+
+    open_writer = feather._open_writer
+
+    class FailOnSecondBatch:
+        def __init__(self, writer):
+            self.writer, self.batches = writer, 0
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.writer.close()
+
+        def write_batch(self, batch):
+            self.batches += 1
+            if self.batches == 2:
+                raise OSError("No space left on device")
+            self.writer.write_batch(batch)
+
+    monkeypatch.setattr(feather, "_open_writer", lambda *a: FailOnSecondBatch(open_writer(*a)))
+    path = tmp_path / f"out.{fmt.value}"
+    with pytest.raises(EngineError, match="No space left"):
+        write_dataframe_to_file(spark.range(0, 20, 1, 2), str(path), fmt, single_file=True)
+    assert os.listdir(tmp_path) == []
+
+
 # ---- error surface (tests/test_general.py:103-112 parity) ---------------
 
 

@@ -227,3 +227,34 @@ def test_notices_between_rows_are_walked_once(backend, walked):
     b = backend(script, 1 << 18)
     _check_pages(b.conn, script, [COMPLETE])
     assert sum(walked) <= 2 * len(script)
+
+
+@pytest.mark.parametrize("interrupt", [KeyboardInterrupt, SystemExit])
+def test_interrupt_mid_page_drops_the_connection(backend, interrupt):
+    """A signal raised while a page is being received (Ctrl-C, or
+    SIGTERM turned into SystemExit) may lose bytes already received, so
+    the stream cannot be drained to ReadyForQuery: the read re-raises at
+    once and the connection is closed.  The server here never sends
+    ReadyForQuery, as after a lost chunk; the client's timeout only
+    bounds how long a drain would wait."""
+    describe = (
+        message(b"1") + message(b"t", b"\0\0")
+        + message(b"T", struct.pack("!h", 1) + b"x\0" + struct.pack("!ihihih", 0, 0, 23, 4, -1, 1))
+    )
+    rows = b"".join(data_row([struct.pack("!i", k)]) for k in range(200))
+    b = backend(describe + message(b"2") + rows, 64)
+    b.client_sock.settimeout(5)
+    fill, fills = b.conn._fill, []
+
+    def interrupted_fill():
+        fills.append(1)
+        if len(fills) == 20:
+            raise interrupt()
+        fill()
+
+    b.conn._fill = interrupted_fill
+    _, batches = b.conn.query_batches("SELECT x", 1000)
+    with pytest.raises(interrupt):
+        next(batches)
+    assert len(fills) == 20
+    assert b.conn._sock is None
